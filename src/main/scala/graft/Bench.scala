@@ -72,18 +72,8 @@ object Bench {
     def makeSession(): SparkSession = {
       // engine defaults live in GraftSession (scan-floor batch size,
       // bucketed-scan ordering, shuffle=cores — each with its measured
-      // rationale there); the bench adds only its experiment knob
-      val s = GraftSession.configure(
-          SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
-        // experiment knob only — AQE stays ON by default (coalescing and
-        // skew-join matter more at real scale than its per-query planning
-        // cost at bench scale)
-        .config("spark.sql.adaptive.enabled",
-          sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
+      // rationale there)
+      GraftSession.local(cpus.toInt)
     }
     var spark = makeSession()
 
@@ -284,7 +274,7 @@ object Bench {
     // exception: their fixtures are stable parquet, so the no-warmup
     // protocol charges them session one-offs (footer listing, codegen,
     // broadcast build) that are not the query's cost — r14 measured the
-    // same m_q87_mat work at 0.99 s warm (MatScanProfile) vs 1.37–1.57
+    // same m_q87_mat work at 0.99 s warm vs 1.37–1.57
     // under the cold min-of-2; these get one untimed warmup + min-of-3
     // on the SAME thunk, matching the DuckDB twin's warm protocol.
     val warmReadEntries = Set("m_q75_mat", "m_q87_mat", "m_q94_mat",
@@ -332,8 +322,9 @@ object Bench {
             try {
               val thunk = mk(spark, runDir)
               // THREE untimed warmups, not one: the r14 "0.18 s residual"
-              // between this thunk and MatScanProfile's reading of the
-              // same work was isolated to JIT compile depth — in a fresh
+              // between this thunk and a warm profile of the same work
+              // was isolated to JIT compile depth (BENCH_COMPARE.md
+              // "m_q87_mat residual: EXPLAINED") — in a fresh
               // JVM the q87-shaped pass reads ~2.0 s and the SAME work
               // settles to ~1.31 s after several passes (2026-08-16,
               // same-window pair at identical batch/file config;

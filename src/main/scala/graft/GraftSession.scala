@@ -3,14 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine's session defaults in ONE place — every CLI main
-  * (Verify/Bench/profiles) and any embedding application builds through
+  * (Verify/Bench/Profile) and any embedding application builds through
   * here so a measured knob is an ENGINE property, not a bench-session
   * accident (r13 verdict #7). Each default carries its measurement:
   *
   *  - `parquet.columnarReaderBatchSize = 16384` (default 4096): −15% on
-  *    the 60M-row materialized-scan floor (MatScanProfile 2026-08-15,
-  *    0.60 → 0.51 s; whole query −12%) for ~0.5 MB more per open column
-  *    batch — the dominant residual of m_q87_mat's JVM decode constant.
+  *    the 60M-row materialized-scan floor (2026-08-15, 0.60 → 0.51 s;
+  *    whole query −12%; BENCH_COMPARE.md "The 60M-row scan floor") for
+  *    ~0.5 MB more per open column batch — the dominant residual of
+  *    m_q87_mat's JVM decode constant.
   *  - `legacy.bucketedTableScan.outputOrdering = true`: lets a
   *    one-file-per-bucket (key, ts)-sorted table — exactly what
   *    [[graft.sql.QueryEngine.saveBucketed]] writes — expose its sort to
@@ -36,29 +37,10 @@ object GraftSession {
   def configure(b: SparkSession.Builder, cpus: Int): SparkSession.Builder =
     b.withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus.toString)
-      // REFUTED engine-wide lever, kept as env experiment knobs (r17):
-      // `coalescePartitions.initialPartitionNum = 8×cores` +
-      // `advisoryPartitionSizeInBytes = 16m` DOES eliminate the decade
-      // sorts' spill (TriSpillProbe: 20 GB disk → 1.3 GB; interleaved
-      // wall win on the 120M-edge pass), but an initial partition count
-      // that differs from spark.sql.shuffle.partitions breaks CACHED
-      // co-partitioning reuse: EnsureRequirements re-exchanges the cached
-      // side of every iterative join (plans/r17/pagerank_iter_x100_after
-      // nodes 40/45: Exchange over InMemoryTableScan), so every cache-
-      // carrying iterative query regressed (q161 7.3 → 12.1 s, nothing
-      // else changed). Verdict: partition-to-data sizing belongs in the
-      // OPERATORS whose shuffles actually outgrow execution memory
-      // (Triangles.scala wedge path — stats-derived, clamped), not in a
-      // session constant; both knobs stay env-settable for experiments
-      // and default to Spark's own defaults.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", cpus.toString))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "64m"))
+      // AQE partition sizing stays at Spark's defaults: OPTIMIZATION_r17.md §0
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.columnarReaderBatchSize",
-        sys.env.getOrElse("SPARK_GRAFT_READER_BATCH", "16384"))
+      .config("spark.sql.parquet.columnarReaderBatchSize", "16384")
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
 
   /** A local[cpus] session with the engine defaults — the CLI mains'

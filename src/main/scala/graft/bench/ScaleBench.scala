@@ -174,10 +174,10 @@ object ScaleBench {
     // 4× cores files, not 1×: the driver writes ONE row group per file,
     // so file count IS the split count, and a single 32-task wave left
     // the tail of every stage on idle cores. Measured on the m_q87_mat
-    // thunk (MatScanProfile, 2026-08-15): 128 files 1.10–1.17 s vs 32
-    // files 1.36–1.49 s (−20%); DuckDB reads the identical layout and is
-    // flat across it (~0.51 s both), so the ratio gain is real, not a
-    // layout tax shifted onto the oracle.
+    // thunk (2026-08-15, BENCH_COMPARE.md "The 60M-row scan floor"):
+    // 128 files 1.10–1.17 s vs 32 files 1.36–1.49 s (−20%); DuckDB reads
+    // the identical layout and is flat across it (~0.51 s both), so the
+    // ratio gain is real, not a layout tax shifted onto the oracle.
     val files = s.sparkContext.defaultParallelism * 4
     val path = s"/tmp/graft_matfix_li100_${n}_p$files"
     if (!Files.exists(java.nio.file.Paths.get(s"$path/_SUCCESS"))) {
@@ -820,7 +820,7 @@ object ScaleBench {
     // the work-scale as-of decade: ~20M facts vs ~20M dim versions on the
     // same pre-derived stable fixture the DuckDB ASOF twin reads
     // (oracle_time.py m_asof_x1000). The ×10 twin is constant-dominated
-    // (AsofProfile: the scan+tag floor IS the whole Spark cost, ~1 s,
+    // (the scan+tag floor IS the whole Spark cost, ~1 s,
     // while DuckDB's engine-side asof is 0.04 s); only this decade
     // measures per-row match work on both engines.
     "m_asof_plain_x1000" -> ((s, dir) => {
@@ -907,8 +907,8 @@ object ScaleBench {
     // by the GLOBAL node/seed count, so per-copy ranks are ~times×
     // smaller than the ×1 run's. The graph fixtures' self-verifying
     // property is replica EXCHANGEABILITY (copy i's ranks equal copy
-    // j's exactly under the integer fixed-point contract —
-    // PageRankDecadeProfile checks it). Built untimed through
+    // j's exactly under the integer fixed-point contract — recorded in
+    // BENCH_COMPARE.md "PageRank ×1000"). Built untimed through
     // [[materialized]]. The ×100 entries run in the
     // fresh-session class ([[freshNames]]) with min-of-2, the ×10 with
     // min-of-3.

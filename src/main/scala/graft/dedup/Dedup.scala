@@ -93,7 +93,8 @@ object Dedup {
     // and the ok-bucket probe of the pairs plan — without the checkpoint
     // the guard's head() ran the (band,sig) groupBy over the full band
     // stream and the pairs job immediately re-ran it. Measured at sf0.1
-    // (Q42Profile, 2026-08-15): a WASH on the local constant (3.12 vs
+    // (2026-08-15, BENCH_COMPARE.md "q42 (MinHash-LSH), the fusion
+    // hypothesis tested"): a WASH on the local constant (3.12 vs
     // 3.32 s full-operator, within host noise) because both passes read
     // the PERSISTED signatures — the r12 hypothesis that this fusion
     // would recover a chunk of q42's job tail is refuted at bench scale.
@@ -600,9 +601,9 @@ object Dedup {
     // verify: exact Jaccard in ONE pass over the candidate pairs. A
     // stage-1 signature-estimate prefilter (join both sides' 128-long
     // persisted sig arrays, keep est ≥ τ−0.1) sat here through r13 —
-    // measured NEGATIVE twice in fresh sessions at sf0.1 (Q42Profile
-    // 2026-08-15: 4.31→3.71 s and 3.85→3.20 s min-of-3 without it, r13
-    // verdict #8's fold): at τ=0.9 the 8-row bands are specific enough
+    // measured NEGATIVE twice in fresh sessions at sf0.1 (2026-08-15:
+    // 4.31→3.71 s and 3.85→3.20 s min-of-3 without it, r13 verdict #8's
+    // fold; BENCH_COMPARE.md r14 "q42 (MinHash-LSH)"): at τ=0.9 the 8-row bands are specific enough
     // that candidates are near-certain true pairs, so the estimate join
     // costs more than the shingle rows it saves. A prefilter would pay
     // again in a false-candidate-heavy regime (low τ, short bands) —
@@ -766,12 +767,13 @@ object Dedup {
     // shingle arrays per PAIR via withColumn (two texts joined onto
     // every candidate row): Catalyst re-evaluates the regex-normalize +
     // shingle chain once per expression REFERENCE (no CSE across
-    // filter/project — the shingleRows trap, again), and SigProfile
-    // measured it at ~20 ms/pair: 107-113 s of the chain at the ×10
+    // filter/project — the shingleRows trap, again), measured at
+    // ~20 ms/pair: 107-113 s of the chain at the ×10
     // sf0.001 fixture (5.6k pairs), 10× slower than the corpus rescan
     // it was built to beat. This shape re-shingles O(involved docs),
     // not O(pairs × refs): the full call drops 57 → 6.0 s on the same
-    // fixture (SigProfile, both recorded).
+    // fixture (both recorded in BENCH_COMPARE.md round 13, "Incremental
+    // near-dup: signature registry vs corpus re-shingle").
     val cand = prefiltered // derives from checkpointed small frames only —
       // re-execution by the consumers below is candidate-bounded
     val involved = cand.select(col("doc_a").as("doc"))

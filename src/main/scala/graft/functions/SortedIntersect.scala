@@ -15,9 +15,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `array_intersect` has the same set semantics but builds a hash set
   * from one side PER ROW (an allocation + O(|a|) inserts every call);
   * over the 10⁸ candidate scale of a dense co-occurrence graph that is
-  * measured GC churn (TriProfile 2026-08-19, the q166/q168 shape). This
-  * expression walks both arrays once with two cursors — zero per-row
-  * scratch beyond the result — and participates in whole-stage codegen.
+  * measured GC churn (2026-08-19, the q166/q168 shape;
+  * OPTIMIZATION_r16.md §1). This expression walks both arrays once with
+  * two cursors — zero per-row scratch beyond the result — and
+  * participates in whole-stage codegen.
   *
   * CONTRACT: both inputs sorted ascending with DISTINCT, NON-NULL
   * elements — exactly what `sort_array(collect_list(x))` over a

@@ -194,12 +194,13 @@ object Triangles {
     * default (partitions = cores) put ~10M wedge rows in each sort and
     * the stage serialized through 48 GB of spill — same speed at 8 and
     * 32 cores (r16 driver artifact, ratio 1.03); sized to data the spill
-    * disappears and the stage scales with cores again (TriSpillProbe /
-    * TriAbProbe tables, OPTIMIZATION_r17.md §0–1). Conf override:
+    * disappears and the stage scales with cores again (stage tables in
+    * OPTIMIZATION_r17.md §0–1). Conf override:
     * `graft.triangles.wedgePartitions`. An engine-wide AQE
     * initialPartitionNum was tried first and REFUTED — it breaks cached
-    * co-partitioning reuse for every OTHER operator (see GraftSession) —
-    * so the sizing lives here, scoped to the one plan that needs it. */
+    * co-partitioning reuse for every OTHER operator (OPTIMIZATION_r17.md
+    * §0) — so the sizing lives here, scoped to the one plan that needs
+    * it. */
   private def wedgePartitions(und: DataFrame): Int = {
     val sess = und.sparkSession
     sess.conf.getOption("graft.triangles.wedgePartitions")

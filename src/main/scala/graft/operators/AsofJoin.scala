@@ -22,10 +22,10 @@ import graft.plans.{AsofCarry, AsofCarryStrategy}
   * buffering) rather than a window: `last(...) over (unbounded
   * preceding)` is semantically one forward scan, but WindowExec buffers
   * every key group in a row store first — measured at the ×1000 as-of
-  * decade as ~2× the whole operator (AsofProfile: floor 3.1 s, window
-  * 6.3 s, carry ≈ floor). [[asofWindow]] keeps the pure-DataFrame
-  * spelling as the A/B baseline and semantic cross-check
-  * (AsofJoinSpec pins equality).
+  * decade as ~2× the whole operator (floor 3.1 s, window 6.3 s, carry
+  * ≈ floor; BENCH_COMPARE.md round 13, as-of). [[asofWindow]] keeps
+  * the pure-DataFrame spelling as the A/B baseline and semantic
+  * cross-check (AsofJoinSpec pins equality).
   *
   * Scale shape: a key-clustered sorted pass, scale-safe when the key is
   * high-cardinality (users/rows — the CDC case). A handful of giant keys
@@ -153,7 +153,7 @@ object AsofJoin {
     * (AsofJoinSpec pins the plan on bucketed tables). On raw inputs
     * EnsureRequirements plans one exchange + sort per side — measured a
     * WASH against [[asof]]'s union form at the ×1000 decade
-    * (AsofProfile 2026-08-15: merge_raw 4.26 s vs carry 4.26 s; the
+    * (2026-08-15: merge_raw 4.26 s vs carry 4.26 s; the
     * narrower un-tagged rows buy back exactly what the second exchange
     * costs), so [[asof]] stays the default for un-laid-out inputs and
     * THIS form is the layout consumer (0.91 s on bucket-sorted tables —

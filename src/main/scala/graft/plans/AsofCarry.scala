@@ -18,8 +18,9 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * forward scan holding O(payload) state — but Spark's WindowExec cannot
   * know that and buffers every (key) group in a row store before
   * evaluating frames. Measured at the ×1000 as-of decade (~40M union
-  * rows, ~26k rows/group, AsofProfile 2026-08-15): union+shuffle+sort
-  * floor 3.1 s, window spelling 6.3 s (5.3 s with the group buffer
+  * rows, ~26k rows/group, 2026-08-15; BENCH_COMPARE.md "As-of: fixture
+  * prep separated from join work"): union+shuffle+sort floor 3.1 s,
+  * window spelling 6.3 s (5.3 s with the group buffer
   * forced in-memory — the buffering itself, not spill, is the cost), so
   * the window machinery nearly DOUBLES the operator. This node pays the
   * floor plus a per-row constant: no group buffer, no frame evaluator,

@@ -355,8 +355,8 @@ object RelationalQueries {
     * join (Generate preserves partitioning), and the only exchange in
     * the plan carries the 500 output groups.
     *
-    * Join strategy is a measured choice ([[graft.Q94Profile]], ×100 bench
-    * scale): with buckets co-located the per-bucket build side is tiny
+    * Join strategy is a measured choice (×100 bench scale, BENCH_COMPARE.md
+    * round 10, the q94 decomposition): with buckets co-located the per-bucket build side is tiny
     * (~150k orders rows / 32), so a shuffled-HASH join — zero exchange
     * AND zero sort — runs at 0.76 s against the no-join floor of 0.92 s
     * (scan + ×100 explode + aggregate alone) and the broadcast twin's

@@ -50,7 +50,7 @@ object QueryEngine {
     * the layout that keeps 100 TB bucket reads sequential instead of a
     * many-small-files seek storm (measured: the multi-file layout cost
     * q94's sort-merge join an extra ~0.5 s of per-task re-sort at ×100
-    * bench scale — see [[graft.Q94Profile]]). */
+    * bench scale — BENCH_COMPARE.md round 10, the q94 decomposition). */
   def saveBucketed(df: org.apache.spark.sql.DataFrame, table: String,
       bucketCol: String, nBuckets: Int): Unit =
     df.repartition(nBuckets, org.apache.spark.sql.functions.col(bucketCol))

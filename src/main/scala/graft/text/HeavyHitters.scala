@@ -42,7 +42,8 @@ import org.apache.spark.sql.functions._
   * exactly the 100 TB web-text tail (billions of distinct tokens).
   *
   * The vocabulary-≫-memory regime is MEASURED, not extrapolated
-  * ([[graft.HhHeapProfile]], wide3 = 750M tokens / ~600M distinct,
+  * (BENCH_COMPARE.md "Heavy hitters: the crossover, forced by heap";
+  * wide3 = 750M tokens / ~600M distinct,
   * r14): at a 4 GiB heap MG completes in 76.2 s — within 1.3× of its
   * 16 GiB number, state k-bounded by construction — while the full
   * groupBy's vocabulary-sized aggregation state OOM-kills the JVM on

@@ -88,7 +88,10 @@ class LakeCatalogSpec extends AnyFunSuite with SparkSpec {
       .write.mode("overwrite").parquet(loc2)
     LakeCatalog.registerParquet(spark, db, "t", loc2)
     assert(LakeCatalog.readTable(spark, db, "t").count() === 3)
-    assert(spark.catalog.listTables(db).count() === 1)
+    // listTables(db) also lists the session's temporary views, which other
+    // suites in the same test JVM register — only db's own tables count
+    assert(spark.catalog.listTables(db).collect()
+      .filterNot(_.isTemporary).map(_.name).toSet === Set("t"))
     // swap suffixes are reserved — a user table named that way would have
     // been silently dropped by the next re-registration (ADVICE r4)
     intercept[IllegalArgumentException] {

@@ -213,7 +213,7 @@ class PlanLintSpec extends AnyFunSuite with SparkSpec {
     // ShuffleExchange BELOW the join means bucketing was not picked up
     // and the fact stream re-shuffled, and any Sort below it means the
     // strategy regressed to sort-merge (the measured-slower form at this
-    // build-side size — see Q94Profile). The walk targets the
+    // build-side size — BENCH_COMPARE.md round 10). The walk targets the
     // pre-replication join frame (q94Pre): the fused ReplicateAgg kernel
     // sits behind an RDD boundary, so the registered query's own
     // executedPlan no longer shows the join.
