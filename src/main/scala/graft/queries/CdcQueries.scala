@@ -729,7 +729,10 @@ object CdcQueries {
 
   // ---------------------------------------------------------------- q32
   /** J2/A5 — the source-vs-lake equality oracle as a diff-count query:
-    * compare the stream against a copy with 1% of values perturbed. */
+    * compare the stream against a copy with 1% of values perturbed.
+    * `CompareTables.compare` gets all four counts from one grouped
+    * aggregation; the oracle SQL below spells the same counts as the
+    * two `EXCEPT ALL`s they equal. */
   def q32CompareDiff(s: SparkSession, dir: String): DataFrame = {
     val left = events(s, dir).select(col("event_id"), col("user_id"), col("value"))
     val right = events(s, dir).select(col("event_id"), col("user_id"),
