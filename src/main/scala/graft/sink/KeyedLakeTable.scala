@@ -1,6 +1,7 @@
 package graft.sink
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 import graft.ops.LakeOps
@@ -56,12 +57,13 @@ final case class LakeTableSpec(
   *  1. incoming batch → derive the 5 partition columns (narrow projection),
   *     drop the CDC `Op` marker, window-dedup within the batch
   *     (`incremental.py:172-183`);
-  *  2. `upsert` prunes the existing table read to ONLY the partitions the
-  *     batch touches (partition values are collected from the deduped batch —
-  *     bounded by batch size, never table size), unions existing + incoming
-  *     with a source-priority column, and resolves per key with latest-wins
-  *     where ties go to the incoming row (Hudi precombine behavior,
-  *     `incremental.py:225-226`);
+  *  2. `upsert` reads ONLY the partition directories the batch touches:
+  *     the batch's one guard action also collects the partition tuples it
+  *     touches (bounded by batch size, never table size), and the existing
+  *     side is read from exactly those directories — the table root is
+  *     never listed. It unions existing + incoming with a source-priority
+  *     column and resolves per key with latest-wins where ties go to the
+  *     incoming row (Hudi precombine behavior, `incremental.py:225-226`);
   *  3. the merged rows are written back with dynamic partition overwrite, so
   *     only touched partitions are rewritten — the 100 TB cost of a batch is
   *     O(touched partitions), not O(table).
@@ -72,7 +74,7 @@ final case class LakeTableSpec(
   */
 object KeyedLakeTable {
   /** Cross-instance memo of resolved reads, keyed by (Spark application,
-    * table path, mergeSchema) and guarded by the table's COMMIT VERSION
+    * table path) and guarded by the table's COMMIT VERSION
     * (r17, VERDICT r16 #5): `spark.read.parquet(dir)` pays a recursive
     * O(partition-dirs) driver-side listing on EVERY call, and one
     * incremental-view fold reads its two state tables ~5 times per cycle
@@ -87,7 +89,7 @@ object KeyedLakeTable {
     * without a marker (pre-r17 layout, foreign writer) never memoizes and
     * keeps the old list-every-time behavior. */
   private val readMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Boolean), (String, DataFrame)]
+    (String, String), (String, DataFrame)]
 }
 
 final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
@@ -121,17 +123,15 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
       }
     } catch { case _: java.io.IOException => None }
 
-  /** The table's base read, memoized per (app, path, mergeSchema) while
+  /** The table's footer-merged base read, memoized per (app, path) while
     * the commit marker is unchanged — two cheap FS calls instead of an
     * O(dirs) recursive listing on a warm hit. */
-  private def rawRead(mergeSchema: Boolean): DataFrame = {
-    def build(): DataFrame =
-      if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(path)
-      else spark.read.parquet(path)
+  private def rawRead(): DataFrame = {
+    def build(): DataFrame = spark.read.option("mergeSchema", "true").parquet(path)
     markerVersion() match {
       case None => build()
       case Some(v) =>
-        val key = (spark.sparkContext.applicationId, path, mergeSchema)
+        val key = (spark.sparkContext.applicationId, path)
         val hit = KeyedLakeTable.readMemo.get(key)
         if (hit != null && hit._1 == v) hit._2
         else {
@@ -156,10 +156,7 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
         s"KeyedLakeTable($path): softDeleteCol '$f' must be boolean, got " +
           df.schema(f).dataType.sql)
     }
-    val guarded0 = df.withColumn(partitionSource,
-      coalesce(col(partitionSource), raise_error(lit(
-        s"KeyedLakeTable($path): null $partitionSource in batch — the " +
-          "partition source column is mandatory (db_orm.py audit-column contract)"))))
+    val guarded0 = nullChecked(df)
     // a null tombstone flag means "live" — normalize so the merged table
     // and the change feed never carry a three-valued delete flag
     val guarded = softDeleteCol.fold(guarded0)(f =>
@@ -167,6 +164,57 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
     val withParts = LakeOps.derivePartitionColumns(LakeOps.dropOp(guarded), partitionSource)
     LakeOps.latestWinsDedup(withParts, recordKeys, precombine,
       tieBreak.map(c => col(c).desc))
+  }
+
+  /** `df` whose first row with a null partition source fails the action
+    * that evaluates it. */
+  private def nullChecked(df: DataFrame): DataFrame =
+    df.withColumn(partitionSource,
+      coalesce(col(partitionSource), raise_error(lit(
+        s"KeyedLakeTable($path): null $partitionSource in batch — the " +
+          "partition source column is mandatory (db_orm.py audit-column contract)"))))
+
+  /** The ONE guard action over a batch, shared by both write modes:
+    *  - an empty batch is a legitimate no-op (CDC extractors emit empty
+    *    files) and must not reach the write paths — an "overwrite" of
+    *    nothing would leave a part-less directory whose later reads fail
+    *    schema inference, a permanently poisoned table path: returns Nil;
+    *  - a null partition source fails the action (see [[nullChecked]]);
+    *  - the pruned merge is only correct if a key's partitionSource never
+    *    changes (`README.rst:124`). Enforce the half that is checkable at
+    *    batch cost — two versions of one key with different partition
+    *    values in the SAME batch — including for the bootstrap batch, so a
+    *    violating key is rejected where it first enters the table, and
+    *    name the smallest such key in the error. (A cross-batch violation
+    *    cannot be detected without a by-key table scan; it remains a
+    *    documented contract.)
+    *
+    * Otherwise returns the distinct partition tuples (`partCols` order)
+    * the batch touches. Per key, `min`/`max` of the partition source
+    * differ exactly when the key has two values; one global aggregate
+    * then yields the smallest violating key and the tuples of the per-key
+    * partition sources — one exchange on the key and one to a single
+    * partition, both batch-sized. */
+  private def guard(df: DataFrame): Seq[Seq[String]] = {
+    val keyCols = recordKeys.map(col)
+    val perKey = nullChecked(df).groupBy(keyCols: _*)
+      .agg(min(col(partitionSource)).as(partitionSource),
+        max(col(partitionSource)).as("__hi"))
+    val g = LakeOps.derivePartitionColumns(perKey, partitionSource)
+      .agg(min(when(col(partitionSource) =!= col("__hi"), struct(keyCols: _*))),
+        collect_set(struct(partCols.map(col): _*)))
+      .head()
+    if (!g.isNullAt(0)) {
+      val offender = g.getStruct(0)
+      val named = recordKeys.zipWithIndex
+        .map { case (k, i) => s"$k=${offender.get(i)}" }.mkString(", ")
+      throw new IllegalArgumentException(
+        s"KeyedLakeTable($path): record key ($named) has multiple " +
+          s"$partitionSource values in one batch — the partition source " +
+          "must be immutable per key")
+    }
+    g.getSeq[org.apache.spark.sql.Row](1)
+      .map(t => partCols.indices.map(t.getString))
   }
 
   /** Cluster rows by their target partition before the partitioned write:
@@ -199,15 +247,17 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
     * drops columns: batch-only columns join the table (existing rows read
     * them as null), table-only columns null-fill the batch, and a SAME-NAME
     * column whose type changed is always an error — silent coercion would
-    * corrupt every already-written row at its next merge. After an evolving
+    * corrupt every already-written row at its next merge. Both checks
+    * compare against the merged schema of the touched partitions' files,
+    * and confirm a mismatch against the whole table's. After an evolving
     * write, untouched partitions still hold old-schema files, so [[read]]
     * footer-merges schemas across files. */
   def upsert(df: DataFrame, evolveSchema: Boolean = false): Unit = {
-    // The batch feeds three actions (guard, touched-partition collect, the
-    // merge write). Persist it so the batch SOURCE — possibly a remote
-    // decompress-heavy read — is scanned once, not once per action; batches
-    // are bounded, so the cache is batch-sized by the same argument as the
-    // checkpoint below.
+    // The batch feeds two actions (the guard, which also collects the
+    // touched partitions, and the merge). Persist it so the batch SOURCE —
+    // possibly a remote decompress-heavy read — is scanned once, not once
+    // per action; batches are bounded, so the cache is batch-sized by the
+    // same argument as the checkpoint in the merge.
     val batch = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try { upsertPersisted(batch, evolveSchema, withChanges = false); () }
     finally batch.unpersist(false)
@@ -228,9 +278,9 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
     * frame is eagerly materialized (batch-bounded) so it stays valid after
     * the overwrite rewrites the partitions it was computed from.
     *
-    * Images carry the columns the table and batch SHARE (under
-    * `evolveSchema` a batch-only column is absent from `old_image`, a
-    * dropped one from `new_image`). */
+    * Images carry the columns the touched partitions' files and the batch
+    * SHARE (under `evolveSchema` a column the touched files lack is absent
+    * from `old_image`, a dropped one from `new_image`). */
   def upsertChanges(df: DataFrame, evolveSchema: Boolean = false): DataFrame = {
     val batch = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try upsertPersisted(batch, evolveSchema, withChanges = true).get
@@ -267,17 +317,7 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
         "precombine values would pick a nondeterministic winner")
     val batch = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val guard = batch
-        .groupBy(recordKeys.map(col): _*)
-        .agg(countDistinct(col(partitionSource)).as("__n"))
-        .agg(count(lit(1)).as("__keys"),
-          coalesce(max(col("__n")), lit(0L)).as("__maxn"))
-        .head()
-      if (guard.getLong(0) == 0L) return // empty batch: legitimate no-op
-      require(guard.getLong(1) <= 1L,
-        s"KeyedLakeTable($path): a record key has multiple " +
-          s"$partitionSource values in one batch — the partition source " +
-          "must be immutable per key")
+      if (guard(batch).isEmpty) return // empty batch: legitimate no-op
       if (!exists) { overwrite(batch); return }
       // one sampled footer, NOT a mergeSchema pass — deferred mode forbids
       // evolution, so every file carries the same columns and the
@@ -384,23 +424,7 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
 
   private def upsertPersisted(df: DataFrame, evolveSchema: Boolean,
       withChanges: Boolean): Option[DataFrame] = {
-    // ONE guard pass over the batch (was two driver jobs in r2):
-    //  - an empty batch is a legitimate no-op (CDC extractors emit empty
-    //    files) and must not reach the write paths — an "overwrite" of
-    //    nothing would leave a part-less directory whose later reads fail
-    //    schema inference, a permanently poisoned table path;
-    //  - the pruned merge is only correct if a key's partitionSource never
-    //    changes (`README.rst:124`). Enforce the half that is checkable at
-    //    batch cost — two versions of one key with different partition
-    //    values in the SAME batch — including for the bootstrap batch, so
-    //    a violating key is rejected where it first enters the table. (A
-    //    cross-batch violation cannot be detected without a by-key table
-    //    scan; it remains a documented contract.)
-    val guard = df
-      .groupBy(recordKeys.map(col): _*)
-      .agg(countDistinct(col(partitionSource)).as("__n"))
-      .agg(count(lit(1)).as("__keys"), coalesce(max(col("__n")), lit(0L)).as("__maxn"))
-      .head()
+    val touched = guard(df)
     // changelog for the degenerate paths: vs an empty "existing" side,
     // every batch winner is an insert (vacuously empty for empty batches)
     def bootstrapChanges(): Option[DataFrame] =
@@ -410,53 +434,37 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
         Some(changelog(inc.limit(0), inc).localCheckpoint(true))
       }
 
-    if (guard.getLong(0) == 0L) return bootstrapChanges() // empty batch
-    if (guard.getLong(1) > 1L) {
-      // failure path only: one extra pass to name a violating key in the
-      // error (ADVICE r3 — the folded guard had stopped reporting it),
-      // costing nothing when the batch is valid
-      val offender = df
-        .groupBy(recordKeys.map(col): _*)
-        .agg(countDistinct(col(partitionSource)).as("__n"))
-        .filter(col("__n") > 1)
-        .limit(1).collect().headOption
-        .map(r => recordKeys.zipWithIndex
-          .map { case (k, i) => s"$k=${r.get(i)}" }.mkString(", "))
-        .getOrElse("<batch changed between guard and report>")
-      throw new IllegalArgumentException(
-        s"KeyedLakeTable($path): record key ($offender) has multiple " +
-          s"$partitionSource values in one batch — the partition source " +
-          "must be immutable per key")
-    }
-
+    if (touched.isEmpty) return bootstrapChanges() // empty batch
     if (!exists) { overwrite(df); return bootstrapChanges() }
 
     val incoming = prep(df)
 
-    // Partition pruning: collect the partition tuples the batch touches
-    // (bounded by batch row count; in practice a handful of minutes).
-    val touched = incoming.select(partCols.map(col): _*).distinct().collect()
-    if (touched.isEmpty) return bootstrapChanges()
+    // Read only the touched partition directories that already exist —
+    // O(touched) FS calls, never a listing of the table root. `basePath`
+    // keeps the five partition columns, and `mergeSchema` reconciles the
+    // footers of exactly the files this merge rewrites: after an evolving
+    // write, touched partitions may mix old- and new-schema files, and
+    // one sampled footer would drop a column from the rows carried over.
+    // Partition values are normalized to the zero-padded strings the
+    // scheme is defined over after the read (a projection).
+    val dirs = touched.map(t => ExternalCatalogUtils.generatePartitionPath(
+      partCols.zip(t).toMap, partCols, new org.apache.hadoop.fs.Path(path)))
+      .filter(hadoopFs.exists)
+    val touchedSide =
+      if (dirs.isEmpty) None
+      else Some(normalizeParts(spark.read.option("basePath", path)
+        .option("mergeSchema", "true").parquet(dirs.map(_.toString): _*)))
 
-    // Read only the touched partitions of the existing table. The filter
-    // must reference the RAW partition columns (whatever type Spark's
-    // partition discovery gave them) with type-matched literals so
-    // PruneFileSourcePartitions actually prunes the listing — filtering on
-    // a normalized projection would scan every partition. Normalization to
-    // zero-padded strings happens after the filter (projection over a
-    // pruned scan).
-    val raw = rawRead(mergeSchema = false)
-    val partTypes = raw.schema.fields.map(f => f.name -> f.dataType).toMap
-    def partLit(c: String, v: String) = partTypes(c) match {
-      case org.apache.spark.sql.types.StringType => lit(v)
-      case _ => lit(v.toInt) // inference only ever yields integral types here
-    }
-    val partFilter = touched.map { r =>
-      partCols.zipWithIndex
-        .map { case (c, i) => col(c) === partLit(c, r.getString(i)) }
-        .reduce(_ && _)
-    }.reduce(_ || _)
-    val existing = normalizeParts(raw.filter(partFilter))
+    // Both column checks read the touched files' merged schema first. On
+    // a mismatch — or when every touched partition is new — they confirm
+    // against the table's full merged schema ([[read]], memoized per
+    // commit), so a batch carrying a column that only untouched
+    // partitions hold is neither rejected nor let past a type conflict.
+    val tableSchema = touchedSide.map(_.schema)
+      .filter(_.fieldNames.toSet == incoming.columns.toSet)
+      .getOrElse(read().schema)
+    val side = touchedSide.getOrElse(spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), tableSchema))
 
     // Union with a source-priority column. With no configured tieBreak,
     // equal precombine values resolve for the incoming row (Hudi precombine
@@ -469,7 +477,7 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
       else tieBreak.map(c => col(c).desc) :+ col("__src").desc
     // Same-name-different-type is an error in BOTH modes: evolution adds
     // and omits columns, it never reinterprets one.
-    val exTypes = existing.schema.map(f => f.name -> f.dataType).toMap
+    val exTypes = tableSchema.map(f => f.name -> f.dataType).toMap
     val typeConflicts = incoming.schema
       .filter(f => exTypes.get(f.name).exists(_ != f.dataType))
       .map(f => s"${f.name}: table=${exTypes(f.name).sql} batch=${f.dataType.sql}")
@@ -477,26 +485,28 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
       s"KeyedLakeTable($path): column type changed between table and " +
         s"batch — ${typeConflicts.mkString("; ")}. Schema evolution " +
         "adds/omits columns; a type change needs an explicit migration.")
-    val merged = (if (evolveSchema) {
-      LakeOps.latestWinsDedup(
-        existing.withColumn("__src", lit(0))
-          .unionByName(incoming.withColumn("__src", lit(1)),
-            allowMissingColumns = true),
-        recordKeys, precombine, srcTie)
-    } else {
-      val missing = existing.columns.toSet.diff(incoming.columns.toSet) ++
-        incoming.columns.toSet.diff(existing.columns.toSet)
-      require(missing.isEmpty,
-        s"KeyedLakeTable($path): batch columns differ from the table's " +
-          s"(${missing.mkString(", ")}) — pass evolveSchema=true if this " +
-          "is a deliberate source schema change")
-      val cols = incoming.columns.filterNot(_ == "__src")
-      LakeOps.latestWinsDedup(
-        existing.withColumn("__src", lit(0)).select((cols :+ "__src").map(col): _*)
-          .unionByName(incoming.withColumn("__src", lit(1))
-            .select((cols :+ "__src").map(col): _*)),
-        recordKeys, precombine, srcTie)
-    }).drop("__src")
+    val existing =
+      if (evolveSchema) side
+      else {
+        val missing = tableSchema.fieldNames.toSet.diff(incoming.columns.toSet) ++
+          incoming.columns.toSet.diff(tableSchema.fieldNames.toSet)
+        require(missing.isEmpty,
+          s"KeyedLakeTable($path): batch columns differ from the table's " +
+            s"(${missing.mkString(", ")}) — pass evolveSchema=true if this " +
+            "is a deliberate source schema change")
+        // in the batch's column order; a touched file older than a column
+        // the table gained elsewhere reads it as null, exactly as [[read]]
+        // does
+        side.select(incoming.schema.map(f =>
+          if (side.columns.contains(f.name)) col(f.name)
+          else lit(null).cast(f.dataType).as(f.name)): _*)
+      }
+
+    val merged = LakeOps.latestWinsDedup(
+      existing.withColumn("__src", lit(0))
+        .unionByName(incoming.withColumn("__src", lit(1)),
+          allowMissingColumns = evolveSchema),
+      recordKeys, precombine, srcTie).drop("__src")
 
     // The change feed must be computed (and materialized — it reads the
     // partitions the write below replaces) BEFORE the overwrite. The
@@ -556,7 +566,7 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
     * scan — which is the price of evolution until a compaction pass
     * rewrites old partitions to the current schema. */
   def read(): DataFrame =
-    normalizeParts(rawRead(mergeSchema = true))
+    normalizeParts(rawRead())
 
   /** The LIVE rows of a soft-delete table: [[read]] minus tombstones —
     * what every analytic consumer queries. Tombstone rows stay in the

@@ -3,7 +3,7 @@ package graft.sink
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{Profile, SparkSpec}
 import graft.ops.LakeOps
 import graft.oracle.{CompareTables, Workload}
 
@@ -261,6 +261,109 @@ class KeyedLakeTableSpec extends AnyFunSuite with SparkSpec {
     val e2 = intercept[IllegalArgumentException](
       table.upsert(retyped, evolveSchema = true))
     assert(e2.getMessage.contains("type changed"), e2.getMessage)
+  }
+
+  /** One key per minute of hour 00 on 2024-01-01: key `k<mm>` lives in
+    * minute `mm`, version `at` has `update_at` second `at`. */
+  private def minuteTxn(minute: Int, at: Int = 1, hour: Int = 0,
+      id: String = null): Workload.Txn =
+    Workload.Txn(Option(id).getOrElse(f"k$minute%02d"), "a1",
+      f"2024-01-01T$hour%02d:$minute%02d:00.000000+0000",
+      f"2024-01-01T$hour%02d:$minute%02d:$at%02d.000000+0000",
+      "fuel", minute, 0, s"v$at")
+
+  /** 20 one-key minutes, then an evolving upsert that adds `channel` =
+    * "web" to minutes 10–19 only: the first-listed files (minutes 00–09)
+    * keep the old schema. */
+  private def evolvedTable(): KeyedLakeTable = {
+    val table = newTable()
+    table.overwrite((0 until 20).map(minuteTxn(_)).toDF())
+    table.upsert((10 until 20).map(minuteTxn(_, at = 2)).toDF()
+      .withColumn("channel", org.apache.spark.sql.functions.lit("web")),
+      evolveSchema = true)
+    table
+  }
+
+  private def channels(table: KeyedLakeTable): Map[String, String] =
+    table.read().select($"id", $"channel").as[(String, String)].collect().toMap
+
+  test("an evolving upsert keeps the evolved column of the rows it carries over") {
+    val table = evolvedTable()
+    // a new key in minute 15: k15 is carried over by the rewrite of that
+    // partition and must keep its channel
+    table.upsert(Seq(minuteTxn(15, at = 3, id = "n15")).toDF()
+      .withColumn("channel", org.apache.spark.sql.functions.lit("app")),
+      evolveSchema = true)
+    val got = channels(table)
+    assert(got("k15") === "web", got)
+    assert(got("n15") === "app", got)
+    assert(got("k03") === null, got)
+    assert(got.size === 21)
+  }
+
+  test("a strict upsert carrying exactly the table's current columns is accepted") {
+    val table = evolvedTable()
+    def withChannel(t: Workload.Txn, c: String) = Seq(t).toDF()
+      .withColumn("channel", org.apache.spark.sql.functions.lit(c))
+    // minute 03 holds only old-schema files: the check confirms against
+    // the whole table, and the carried-over rows read channel as null
+    table.upsert(withChannel(minuteTxn(3, at = 3), "mobile"))
+    // minute 15's files already carry channel
+    table.upsert(withChannel(minuteTxn(15, at = 3), "mobile"))
+    val got = channels(table)
+    assert(got("k03") === "mobile" && got("k15") === "mobile", got)
+    assert(got("k04") === null && got("k16") === "web", got)
+    // a strict batch without channel into minute 15 still differs from
+    // the table's columns
+    val e = intercept[IllegalArgumentException](
+      table.upsert(Seq(minuteTxn(15, at = 4)).toDF()))
+    assert(e.getMessage.contains("(channel)"), e.getMessage)
+  }
+
+  test("a batch touching only new partitions is still column- and type-checked") {
+    val table = evolvedTable()
+    val fresh = Seq(minuteTxn(30, hour = 1)).toDF()
+      .withColumn("channel", org.apache.spark.sql.functions.lit("web"))
+    val extra = intercept[IllegalArgumentException](
+      table.upsert(fresh.withColumn("region", $"entity")))
+    assert(extra.getMessage.contains("(region)"), extra.getMessage)
+    val retyped = fresh.withColumn("amount", $"amount".cast("string"))
+    Seq(false, true).foreach { evolve =>
+      val e = intercept[IllegalArgumentException](
+        table.upsert(retyped, evolveSchema = evolve))
+      assert(e.getMessage.contains("type changed"), e.getMessage)
+    }
+    assert(table.read().count() === 20)
+    table.upsert(fresh)
+    assert(channels(table).get("k30") === Some("web"))
+  }
+
+  test("an upsert lists only the partitions it touches, never the table") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // 45 minute partitions under one hour directory: Spark lists a
+    // directory level of more than 32 entries in a distributed job
+    val table = newTable()
+    table.overwrite((0 until 45).map(minuteTxn(_)).toDF())
+    val batch = Seq(minuteTxn(5, at = 2), minuteTxn(30, at = 2),
+      minuteTxn(0, hour = 1, id = "n100")).toDF()
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(p => Option(p.getProperty("spark.jobGroup.id"))
+            .exists(_.startsWith("graft-profile-")))
+          .foreach(p => descriptions.add(
+            Option(p.getProperty("spark.job.description")).getOrElse("")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val report = try Profile.profile(spark)(table.upsert(batch))._2
+      finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val listings = descriptions.asScala.filter(_.startsWith("Listing leaf files"))
+    assert(listings.isEmpty, listings.mkString("\n"))
+    // reading the whole table's file index made this upsert 15 jobs, one
+    // of them the 45-path listing; reading the touched directories, 10
+    assert(report.jobs < 15, report.render("upsert"))
+    assert(table.read().count() === 46)
   }
 
   test("soft delete: a tombstone wins only by precombine, an older version " +

@@ -4,6 +4,8 @@
     python3 tools/lakebench_ab.py --base-rev HEAD~1 --seeds 301-310
     python3 tools/lakebench_ab.py --base-rev main --workload cdc_cow \\
         --seeds 301,302,303 --out ab.json
+    python3 tools/lakebench_ab.py --base-rev HEAD~1 --workload cdc_cow \\
+        --seeds 301-310 --claim cdc_cow/primary_cpu_s
 
 For every workload and seed it runs `python3 lakebench/run.py --trace 0`
 (run length from BENCHMARK.json) once in a checkout of the base commit
@@ -20,8 +22,14 @@ in the repository) and reused by later calls. Each checkout builds its
 own classpath on its first run, so the first pair also pays two sbt
 builds.
 
-Exit code: 0 if no end-to-end metric's median is worse than its bound and
-every run succeeded; 1 otherwise. Only `lakebench/` and BENCHMARK.json
+`--claim WORKLOAD/METRIC` (repeatable) names a metric the change claims
+to improve. For each claim the tool prints whether it holds: the change
+won at least 9 in 10 of the pairs and its median is better than the
+base's by more than the base's spread (interquartile range over median),
+the same rule the table's `better` verdict applies.
+
+Exit code: 0 if no end-to-end metric's median is worse than its bound,
+every run succeeded and every claim holds; 1 otherwise. Only `lakebench/` and BENCHMARK.json
 are read; the benchmark itself is not changed.
 """
 
@@ -89,11 +97,11 @@ def quartiles(xs):
 
 
 def report(workload, pairs, end_to_end):
-    """Print one table; return the names of metrics worse than their bound."""
+    """Print one table; return {metric: its row} (verdict, delta, iqr, won, n)."""
     print(f"\n== {workload}: {len(pairs)} pairs")
     print(f"{'metric':<20} {'base':>11} {'change':>11} {'delta':>8} "
           f"{'bound':>6} {'base_iqr':>9} {'won':>6}  verdict")
-    worse = []
+    verdicts = {}
     for m in end_to_end:
         name, bound = m["name"], m["bound"]
         sign = 1.0 if m["better"] == "lower" else -1.0
@@ -101,7 +109,7 @@ def report(workload, pairs, end_to_end):
                for b, c in pairs if name in b["metrics"] and name in c["metrics"]]
         if not got:
             print(f"{name:<20} {'-':>11} {'-':>11}  missing")
-            worse.append(name)
+            verdicts[name] = {"verdict": "missing"}
             continue
         base = [b for b, _ in got]
         change = [c for _, c in got]
@@ -113,14 +121,15 @@ def report(workload, pairs, end_to_end):
         won = sum(1 for b, c in got if sign * (b - c) > 0)
         if delta < -bound:
             verdict = "WORSE than bound"
-            worse.append(name)
         elif won >= 0.9 * len(got) and delta > iqr:
             verdict = "better"
         else:
             verdict = "within bound"
         print(f"{name:<20} {mb:>11.4g} {mc:>11.4g} {delta:>+8.1%} "
               f"{bound:>6.2f} {iqr:>9.3f} {won:>3}/{len(got):<2}  {verdict}")
-    return worse
+        verdicts[name] = {"verdict": verdict, "delta": delta, "iqr": iqr,
+                          "won": won, "n": len(got)}
+    return verdicts
 
 
 def main():
@@ -132,12 +141,20 @@ def main():
     ap.add_argument("--seeds", default="301-306",
                     help="seeds, e.g. 301-310 or 301,305 (one pair each)")
     ap.add_argument("--out", help="write every run's result to this JSON file")
+    ap.add_argument("--claim", action="append", default=[], metavar="WORKLOAD/METRIC",
+                    help="an end-to-end metric the change claims to improve (repeatable)")
     a = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
     workloads = a.workload or [w["name"] for w in bench["workloads"]]
     seconds = bench["run_seconds"]
+    metrics = {m["name"] for m in bench["end_to_end"]}
+    for c in a.claim:
+        w, _, m = c.partition("/")
+        if w not in workloads or m not in metrics:
+            ap.error(f"--claim {c}: not WORKLOAD/METRIC of a workload being run "
+                     f"({', '.join(workloads)}) and an end-to-end metric of BENCHMARK.json")
     base = export_base(a.base_rev)
     seeds = parse_seeds(a.seeds)
 
@@ -163,16 +180,29 @@ def main():
     if a.out:
         with open(a.out, "w") as fh:
             json.dump(runs, fh)
-    worse = []
+    verdicts = {}
     for w in workloads:
         pairs = [(p["base"], p["change"]) for p in runs[w]
                  if p["base"] is not None and p["change"] is not None]
-        worse += [f"{w}.{m}" for m in report(w, pairs, bench["end_to_end"])]
+        for m, row in report(w, pairs, bench["end_to_end"]).items():
+            verdicts[f"{w}/{m}"] = row
+    worse = [k for k, row in verdicts.items()
+             if row["verdict"] in ("WORSE than bound", "missing")]
+    failed_claims = []
+    for c in a.claim:
+        row = verdicts[c]
+        holds = row["verdict"] == "better"
+        detail = (f"median {row['delta']:+.1%} (positive = better), won "
+                  f"{row['won']}/{row['n']} pairs, base IQR/median {row['iqr']:.3f}"
+                  if "delta" in row else "no values")
+        print(f"claim {c}: {'holds' if holds else 'does NOT hold'}: {detail}")
+        if not holds:
+            failed_claims.append(c)
     for p in problems:
         print(f"PROBLEM: {p}")
     if worse:
         print("worse than bound: " + ", ".join(worse))
-    sys.exit(1 if worse or problems else 0)
+    sys.exit(1 if worse or problems or failed_claims else 0)
 
 
 if __name__ == "__main__":
