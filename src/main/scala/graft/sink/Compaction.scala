@@ -78,6 +78,15 @@ object Compaction {
         .flatMap(s => leafStats(fs, s.getPath, depth - 1))
   }
 
+  /** Files under `path` changed: bump the [[KeyedLakeTable]] commit marker
+    * so memoized reads of the table re-list instead of scanning rewritten
+    * or deleted files. Only a table that already carries a marker is
+    * memoized; a marker-less one (a landing zone, a foreign writer's
+    * table) is left without one, so it keeps listing on every read. */
+  private def invalidateReads(fs: FileSystem, path: String): Unit =
+    if (fs.exists(KeyedLakeTable.commitMarker(path)))
+      KeyedLakeTable.bumpCommit(fs, path)
+
   /** Per-file target: `ceil(bytes / targetBytes)` bounded below by 1.
     * A partition is a candidate iff it holds MORE files than its bytes
     * justify — compaction only ever reduces file count. */
@@ -165,6 +174,7 @@ object Compaction {
       case Some(m) => spark.conf.set(modeKey, m)
       case None => spark.conf.unset(modeKey)
     }
+    invalidateReads(fs, path)
 
     val after = leafStats(fs, new Path(path), partCols.length)
       .filter(_.files > 0)
@@ -211,9 +221,11 @@ object Compaction {
         p = p.getParent
       }
     }
-    if (dropped.nonEmpty)
+    if (dropped.nonEmpty) {
+      invalidateReads(fs, path)
       log.info(s"expireBefore($path): dropped ${dropped.length} partitions " +
         s"(${dropped.map(_.bytes).sum} bytes) before ${cutoff.mkString("/")}")
+    }
     RetentionReport(leaves.length, dropped.length, dropped.map(_.bytes).sum)
   }
 

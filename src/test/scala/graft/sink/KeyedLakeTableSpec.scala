@@ -456,4 +456,158 @@ class KeyedLakeTableSpec extends AnyFunSuite with SparkSpec {
     assert(marker.delete())
     assert(asState(t1.read()) === Workload.expectedTxnState(log).toSet)
   }
+
+  /** The table read without any memo: what `read()` must equal. */
+  private def freshRead(table: KeyedLakeTable): DataFrame = table.normalizeParts(
+    spark.read.option("mergeSchema", "true").parquet(table.spec.path))
+
+  /** `got` equals a fresh read of `table` in schema (names, types and
+    * order), input files (as a set) and rows (as a multiset). */
+  private def assertFresh(got: DataFrame, table: KeyedLakeTable, step: String): Unit = {
+    val fresh = freshRead(table)
+    def fields(d: DataFrame) = d.schema.map(f => (f.name, f.dataType))
+    assert(fields(got) === fields(fresh), step)
+    assert(got.inputFiles.toSet === fresh.inputFiles.toSet, step)
+    def rows(d: DataFrame) = d.collect().map(_.toString).sorted.toSeq
+    assert(rows(got) === rows(fresh), step)
+  }
+
+  /** Profile one `read()`: its frame and the number of Spark jobs it ran. */
+  private def profiledRead(table: KeyedLakeTable): (DataFrame, Int) = {
+    val (df, report) = Profile.profile(spark)(table.read())
+    (df, report.jobs)
+  }
+
+  private def assertWarm(table: KeyedLakeTable, step: String): Unit = {
+    val (got, jobs) = profiledRead(table)
+    assert(jobs === 0, s"$step: read() ran $jobs jobs")
+    assertFresh(got, table, step)
+  }
+
+  private def assertMiss(table: KeyedLakeTable, step: String): Unit = {
+    val (got, jobs) = profiledRead(table)
+    assert(jobs > 0, s"$step: read() must re-list and re-merge footers")
+    assertFresh(got, table, step)
+  }
+
+  private def withPartitionInference[T](on: Boolean)(body: => T): T = {
+    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, on.toString)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  Seq(false, true).foreach { infer =>
+    test("write-through memo: the read after upsert, upsertChanges and " +
+        "upsertDeferred runs no job and equals a fresh read " +
+        s"(partition type inference ${if (infer) "on" else "off"})") {
+      withPartitionInference(infer) {
+        // 45 minute partitions: a fresh read lists them in a distributed job
+        val table = newTable(tieBreak = Seq("note"))
+        table.overwrite((0 until 45).map(minuteTxn(_)).toDF())
+        assertMiss(table, "after overwrite")
+        assertWarm(table, "warm")
+        // two old partitions and one new hour
+        table.upsert(Seq(minuteTxn(5, at = 2), minuteTxn(30, at = 2),
+          minuteTxn(0, hour = 1, id = "n100")).toDF())
+        assertWarm(table, "upsert")
+        table.upsertChanges(Seq(minuteTxn(5, at = 3), minuteTxn(1, hour = 1,
+          id = "n101")).toDF()).collect()
+        assertWarm(table, "upsertChanges")
+        table.upsertDeferred(Seq(minuteTxn(7, at = 4), minuteTxn(0, hour = 1,
+          id = "n100", at = 4), minuteTxn(2, hour = 1, id = "n102")).toDF())
+        assertWarm(table, "upsertDeferred")
+        // a write through another instance on the same path refreshes the
+        // same (session, path) entry
+        val other = new KeyedLakeTable(spark, table.spec)
+        other.upsert(Seq(minuteTxn(7, at = 5), minuteTxn(44, at = 5)).toDF())
+        assertWarm(table, "second instance, first handle")
+        assertWarm(other, "second instance, writing handle")
+        assert(table.readMerged().count() === 48)
+        // an evolving upsert drops the entry: the next read lists once
+        table.upsert(Seq(minuteTxn(9, at = 6)).toDF()
+          .withColumn("channel", org.apache.spark.sql.functions.lit("web")),
+          evolveSchema = true)
+        assertMiss(table, "evolving upsert")
+        assertWarm(table, "warm after evolving upsert")
+        table.overwrite((0 until 45).map(minuteTxn(_, at = 7)).toDF())
+        assertMiss(table, "overwrite")
+      }
+    }
+  }
+
+  test("a sibling session's read is bound to that session") {
+    val table = newTable()
+    table.overwrite((0 until 3).map(minuteTxn(_)).toDF())
+    assert(table.read().sparkSession eq spark)
+    val sibling = spark.newSession()
+    val mine = new KeyedLakeTable(sibling, table.spec)
+    assert(mine.read().sparkSession eq sibling)
+    assert(table.read().sparkSession eq spark)
+  }
+
+  test("the read memo keeps the most recently read tables, a bounded number") {
+    val first = newTable()
+    first.overwrite(Seq(minuteTxn(1)).toDF())
+    // copies of the one-partition table, each with its own marker
+    val src = java.nio.file.Paths.get(first.spec.path)
+    val copies = (1 to KeyedLakeTable.memoEntries).map { _ =>
+      val dst = java.nio.file.Paths.get(tmpDir("lake-copy"))
+      java.nio.file.Files.walk(src).forEach { p =>
+        val q = dst.resolve(src.relativize(p))
+        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(q)
+        else java.nio.file.Files.copy(p, q)
+      }
+      new KeyedLakeTable(spark, first.spec.copy(path = dst.toString))
+    }
+    assertMiss(first, "first read")
+    assertWarm(first, "warm")
+    copies.foreach(_.read())
+    assertWarm(copies.last, "most recent copy")
+    assertMiss(first, "least recently read, evicted")
+  }
+
+  /** 10 one-key minutes of hour 00 and 10 of hour 01, then two deferred
+    * appends into four of them: several files per touched partition. */
+  private def fragmentedTable(): KeyedLakeTable = {
+    val table = newTable(tieBreak = Seq("note"))
+    table.overwrite(((0 until 10).map(minuteTxn(_)) ++
+      (0 until 10).map(m => minuteTxn(m, hour = 1, id = f"h$m%02d"))).toDF())
+    Seq(2, 3).foreach(at => table.upsertDeferred(Seq(minuteTxn(1, at = at),
+      minuteTxn(2, at = at), minuteTxn(1, hour = 1, id = "h01", at = at),
+      minuteTxn(2, hour = 1, id = "h02", at = at)).toDF()))
+    table
+  }
+
+  test("compaction invalidates memoized reads; an already-compact table " +
+      "keeps them") {
+    val table = fragmentedTable()
+    val rows = table.readMerged().count()
+    assertWarm(table, "warm")
+    val report = Compaction.compact(spark, table.spec.path, LakeOps.partitionCols)
+    assert(report.partitionsCompacted === 4)
+    assertMiss(table, "after compact")
+    assert(table.readMerged().count() === rows)
+    assert(Compaction.compact(spark, table.spec.path, LakeOps.partitionCols)
+      .partitionsCompacted === 0)
+    assertWarm(table, "after a no-op compact")
+  }
+
+  test("retention invalidates memoized reads") {
+    val table = fragmentedTable()
+    table.read()
+    assertWarm(table, "warm")
+    val report = Compaction.expireBefore(spark, table.spec.path,
+      LakeOps.partitionCols, Seq("2024", "01", "01", "01"))
+    assert(report.partitionsDropped === 10)
+    assertMiss(table, "after expire")
+    assert(table.readMerged().count() === 10)
+    assert(Compaction.expireBefore(spark, table.spec.path,
+      LakeOps.partitionCols, Seq("2024", "01", "01", "01")).partitionsDropped === 0)
+    assertWarm(table, "after a no-op expire")
+  }
 }

@@ -13,8 +13,19 @@ and once in the working tree, alternating which side goes first, so host
 drift lands on both sides alike. It then prints, per workload and
 end-to-end metric of BENCHMARK.json: both medians, the relative delta
 (positive = change is better), the metric's bound, the base's spread
-(interquartile range over median), how many pairs the change won, and a
-verdict. Any run with `failed > 0` or without a result is listed.
+(interquartile range over median), both sides' quartiles, how many pairs
+the change won, and a verdict:
+
+  WORSE than bound  the change's median is worse than the base's by more
+                    than the metric's bound;
+  better            the change won at least 9 in 10 pairs and its median
+                    is better by more than the base's spread;
+  unresolved        the base's spread exceeds the bound, so "no worse
+                    than the bound" cannot be read off the medians —
+                    unless every change run is better than every base run;
+  within bound      otherwise.
+
+Any run with `failed > 0` or without a result is listed.
 
 The base commit is exported with `git archive` into
 `.bench_build/ab-base-<sha>` (a plain copy: it leaves nothing registered
@@ -29,7 +40,8 @@ base's by more than the base's spread (interquartile range over median),
 the same rule the table's `better` verdict applies.
 
 Exit code: 0 if no end-to-end metric's median is worse than its bound,
-every run succeeded and every claim holds; 1 otherwise. Only `lakebench/` and BENCHMARK.json
+every run succeeded and every claim holds; 1 otherwise. Unresolved
+metrics are listed but do not change the exit code. Only `lakebench/` and BENCHMARK.json
 are read; the benchmark itself is not changed.
 """
 
@@ -100,7 +112,8 @@ def report(workload, pairs, end_to_end):
     """Print one table; return {metric: its row} (verdict, delta, iqr, won, n)."""
     print(f"\n== {workload}: {len(pairs)} pairs")
     print(f"{'metric':<20} {'base':>11} {'change':>11} {'delta':>8} "
-          f"{'bound':>6} {'base_iqr':>9} {'won':>6}  verdict")
+          f"{'bound':>6} {'base_iqr':>9} {'base_q1..q3':>23} "
+          f"{'change_q1..q3':>23} {'won':>6}  verdict")
     verdicts = {}
     for m in end_to_end:
         name, bound = m["name"], m["bound"]
@@ -117,16 +130,23 @@ def report(workload, pairs, end_to_end):
         # positive = the change is better, as a share of the base median
         delta = sign * (mb - mc) / mb if mb else 0.0
         q1, q3 = quartiles(base)
+        c1, c3 = quartiles(change)
         iqr = (q3 - q1) / mb if mb else 0.0
         won = sum(1 for b, c in got if sign * (b - c) > 0)
+        # every change run better than every base run
+        separated = sign * (min(base, key=lambda x: sign * x)
+                            - max(change, key=lambda x: sign * x)) > 0
         if delta < -bound:
             verdict = "WORSE than bound"
         elif won >= 0.9 * len(got) and delta > iqr:
             verdict = "better"
+        elif iqr > bound and not separated:
+            verdict = "unresolved"
         else:
             verdict = "within bound"
         print(f"{name:<20} {mb:>11.4g} {mc:>11.4g} {delta:>+8.1%} "
-              f"{bound:>6.2f} {iqr:>9.3f} {won:>3}/{len(got):<2}  {verdict}")
+              f"{bound:>6.2f} {iqr:>9.3f} {f'{q1:.4g}..{q3:.4g}':>23} "
+              f"{f'{c1:.4g}..{c3:.4g}':>23} {won:>3}/{len(got):<2}  {verdict}")
         verdicts[name] = {"verdict": verdict, "delta": delta, "iqr": iqr,
                           "won": won, "n": len(got)}
     return verdicts
@@ -202,6 +222,9 @@ def main():
         print(f"PROBLEM: {p}")
     if worse:
         print("worse than bound: " + ", ".join(worse))
+    unresolved = [k for k, row in verdicts.items() if row["verdict"] == "unresolved"]
+    if unresolved:
+        print("unresolved (base spread above bound): " + ", ".join(unresolved))
     sys.exit(1 if worse or problems or failed_claims else 0)
 
 
