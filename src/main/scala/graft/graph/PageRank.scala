@@ -44,9 +44,18 @@ import org.apache.spark.sql.functions._
   *     aggregate (the pregel exchange, unavoidable), and ONE scalar
   *     aggregate for the dangling mass (a single driver long — not a
   *     driver-side data collect);
-  *   - rank frames are cached per iteration and the predecessor is
-  *     unpersisted, so lineage stays one-iteration deep and no round
-  *     recomputes history (the classic iterative-DataFrame trap).
+  *   - rank frames are cached per iteration, and each round is built on
+  *     a lazy local checkpoint of its cached predecessor, so both the data
+  *     and the PLAN stay one iteration deep. Caching alone bounds only
+  *     the data: every action's plan would nest each earlier round's
+  *     plan, and Spark renders that whole tree into the plan description
+  *     it keeps for the SQL status store, once per action. The
+  *     checkpoint of a cached frame runs no job (its physical plan is an
+  *     InMemoryTableScan); its blocks fill inside the next round's
+  *     dangling-mass job, after which the predecessor is unpersisted.
+  *     Never checkpoint an UNCACHED adaptive frame lazily: the call runs
+  *     the plan's shuffle stages there and then. The result is the last
+  *     cached frame; `result.unpersist()` frees it.
   */
 object PageRank {
 
@@ -187,35 +196,45 @@ object PageRank {
           col("od"))
     }).cache()
     var dang = dangOf(ranks)
-    for (_ <- 1 to iters) {
-      val dangShare = dang / s
+
+    // One round on `cur` (node, r, od), read through a lazy local
+    // checkpoint so the round's plan has a LogicalRDD leaf where it would
+    // nest every earlier round. `cur` must be cached (see the scaladoc):
+    // then the checkpoint runs no job and fills inside the round's action.
+    def round(cur: DataFrame, dang: Long): DataFrame = {
       val contribs = e
-        .join(ranks.where(col("od").isNotNull)
+        .join(cur.localCheckpoint(eager = false).where(col("od").isNotNull)
             .select(col("node").as("src"), col("r"), col("od")),
           Seq("src"))
         .groupBy(col("dst").as("node"))
         .agg(sum(expr("r div od")).as("c"))
-      val next = flaggedC.join(contribs, Seq("node"), "left")
+      flaggedC.join(contribs, Seq("node"), "left")
         .select(col("node"),
           when(col("is_seed"),
             lit(base) +
-              expr(s"(85 * (${dangShare}L + coalesce(c, 0L))) div 100"))
+              expr(s"(85 * (${dang / s}L + coalesce(c, 0L))) div 100"))
             .otherwise(expr("(85 * coalesce(c, 0L)) div 100"))
             .as("r"),
           col("od"))
-        .cache()
+    }
+    // Frame k is freed only after frame k+1's dangOf job, which reads
+    // every partition of frame k's checkpoint and so fills it.
+    for (_ <- 1 until iters) {
+      val next = round(ranks, dang).cache()
       dang = dangOf(next) // materializes next's cache in the same job
       ranks.unpersist()
       ranks = next
     }
-    // Drop the working frames (their data is consumed — the final rank
-    // frame is materialized in cache). The RESULT frame itself stays
-    // cached by design: it is the returned value, and unpersisting it
-    // here would make the caller's first action replay every iteration.
-    // Callers holding many results across one session own that cleanup
-    // (`result.unpersist()`); eviction merely recomputes.
-    e.unpersist(); nodes.unpersist(); flaggedC.unpersist()
-    ranks.select(col("node"), col("r").as("rank"))
+    // The last round's dangling mass is never used, so the result is
+    // cached in its output shape and filled by a count: the caller's
+    // `result.unpersist()` then frees the last PageRank frame left in
+    // the cache. Checkpoint blocks are freed when their RDDs are
+    // garbage-collected.
+    val result = round(ranks, dang)
+      .select(col("node"), col("r").as("rank")).cache()
+    result.count()
+    ranks.unpersist(); e.unpersist(); nodes.unpersist(); flaggedC.unpersist()
+    result
   }
 
   /** The corpus graph q161 ranks: directed customer→supplier edges for

@@ -17,11 +17,6 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      // Every action builds its plan's description string for the SQL
-      // listener. An iterative plan over cached frames (PageRank) nests
-      // each earlier iteration's plan, so that string doubles per
-      // iteration and an 8-iteration run outgrows a 4 GiB heap.
-      .config("spark.sql.maxPlanStringLength", "1m")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -144,6 +145,44 @@ class PageRankSpec extends AnyFunSuite {
       runPpr(hand, Seq("ghost"))
     }
     assert(e.getMessage.contains("seed"))
+  }
+
+  // ---------------------------------------------------- plan and cache
+
+  /** Nodes of the optimized plan as its description prints them, one a
+    * line: a cached relation prints the plan it caches, so a frame built
+    * on cached rounds prints every earlier round. */
+  private def planNodes(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.treeString.linesIterator.size
+
+  private val forms: Seq[(String, Int => DataFrame)] = Seq(
+    "run" -> (k => PageRank.run(hand.toDF("src", "dst"), iters = k)),
+    "personalized" -> (k => PageRank.personalized(hand.toDF("src", "dst"),
+      Seq("a", "d").toDF("node"), iters = k)),
+    "resume" -> (k => PageRank.resume(hand.toDF("src", "dst"),
+      Seq(("a", PageRank.Scale / 2)).toDF("node", "rank"), iters = k)))
+
+  test("the result's plan has the same size at 2 and at 6 iterations") {
+    for ((name, pr) <- forms) {
+      val sizes = Seq(2, 6).map { k =>
+        val r = pr(k)
+        try planNodes(r)
+        finally r.unpersist(blocking = true)
+      }
+      assert(sizes(0) === sizes(1), s"$name: plan nodes at iters 2 vs 6")
+    }
+  }
+
+  test("result.unpersist() leaves no PageRank frame in the cache") {
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    for ((name, pr) <- forms) {
+      val r = pr(4)
+      assert(!cache.isEmpty, s"$name: the result is returned cached")
+      r.unpersist(blocking = true)
+      assert(cache.isEmpty, s"$name: frames left cached after unpersist")
+    }
   }
 
   test("corpus edge rule: mod-3 suppliers have out-edges, others dangle") {
