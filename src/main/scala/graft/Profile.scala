@@ -190,6 +190,8 @@ object Profile {
     val spark = GraftSession.local(cpus)
     try entries.foreach { case (name, mk) =>
       mk(spark, sfDir)() // warm-up: file listing, codegen, JIT
+      // a frame the warm-up left cached must not serve the profiled pass
+      spark.catalog.clearCache()
       val run = mk(spark, sfDir)
       println(profile(spark)(run())._2.render(name))
     } finally spark.stop()

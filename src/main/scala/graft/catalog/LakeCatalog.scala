@@ -98,7 +98,7 @@ object LakeCatalog {
     *
     * The data schema is read from the parquet footers once at registration;
     * partition columns are declared STRING (the lake's partition scheme is
-    * zero-padded strings — see `KeyedLakeTable.normalizeParts`), and
+    * zero-padded strings — see `KeyedMerge.normalizeParts`), and
     * `recoverPartitions` imports the existing directory tree into catalog
     * partitions so partition pruning is metadata-only from then on.
     *

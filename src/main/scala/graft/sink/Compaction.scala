@@ -163,17 +163,11 @@ object Compaction {
       .drop("__slice")
       .localCheckpoint(true)
 
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prevMode = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
-    try materialized.write
+    materialized.write
       .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCols: _*)
       .parquet(path)
-    finally prevMode match {
-      case Some(m) => spark.conf.set(modeKey, m)
-      case None => spark.conf.unset(modeKey)
-    }
     invalidateReads(fs, path)
 
     val after = leafStats(fs, new Path(path), partCols.length)

@@ -9,8 +9,6 @@ import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRela
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.LakeOps
-
 /** Specification of a keyed, partitioned, upsertable lake table — the three
   * degrees of freedom of the reference's lake tables (SURVEY.md §1.1 item 4;
   * `glue_jobs/initial_load.py:156-183`, `glue_jobs/incremental.py:216-243`):
@@ -75,7 +73,10 @@ final case class LakeTableSpec(
   *
   * The one shuffle is the dedup window on the record key; its input is
   * (touched partitions + batch), which the never-changing `partitionSource`
-  * invariant keeps proportional to batch size.
+  * invariant keeps proportional to batch size. The batch side of steps 1–2
+  * (prep, guard, latest-wins union) is [[KeyedMerge]], shared with
+  * [[VersionedLakeTable]]; the commit — overwrite, marker, memo — is this
+  * table's own.
   */
 object KeyedLakeTable {
   /** Memo of resolved reads, keyed by (session, table path) and guarded by
@@ -149,8 +150,9 @@ object KeyedLakeTable {
 final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
   import spec._
   import KeyedLakeTable._
+  import KeyedMerge.{normalizeParts, partCols, persisted}
 
-  private val partCols = LakeOps.partitionCols
+  private val merge = new KeyedMerge(spec, "KeyedLakeTable")
 
   private def hadoopFs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def memoKey = (spark, path)
@@ -240,81 +242,6 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
       rel.dataSchema, rel.bucketSpec, rel.fileFormat, rel.options)(spark))
   }
 
-  /** Batch prep shared by both write modes: reject null partition sources
-    * (a null would otherwise silently shunt rows into the Hive default
-    * partition and break the pruned merge), drop Op, derive partitions,
-    * in-batch latest-wins dedup (W1 before the sink, like the reference). */
-  private def prep(df: DataFrame): DataFrame = {
-    softDeleteCol.foreach { f =>
-      require(df.columns.contains(f),
-        s"KeyedLakeTable($path): softDeleteCol '$f' missing from batch — " +
-          "every batch of a soft-delete table must carry the tombstone flag")
-      require(df.schema(f).dataType ==
-          org.apache.spark.sql.types.BooleanType,
-        s"KeyedLakeTable($path): softDeleteCol '$f' must be boolean, got " +
-          df.schema(f).dataType.sql)
-    }
-    val guarded0 = nullChecked(df)
-    // a null tombstone flag means "live" — normalize so the merged table
-    // and the change feed never carry a three-valued delete flag
-    val guarded = softDeleteCol.fold(guarded0)(f =>
-      guarded0.withColumn(f, coalesce(col(f), lit(false))))
-    val withParts = LakeOps.derivePartitionColumns(LakeOps.dropOp(guarded), partitionSource)
-    LakeOps.latestWinsDedup(withParts, recordKeys, precombine,
-      tieBreak.map(c => col(c).desc))
-  }
-
-  /** `df` whose first row with a null partition source fails the action
-    * that evaluates it. */
-  private def nullChecked(df: DataFrame): DataFrame =
-    df.withColumn(partitionSource,
-      coalesce(col(partitionSource), raise_error(lit(
-        s"KeyedLakeTable($path): null $partitionSource in batch — the " +
-          "partition source column is mandatory (db_orm.py audit-column contract)"))))
-
-  /** The ONE guard action over a batch, shared by both write modes:
-    *  - an empty batch is a legitimate no-op (CDC extractors emit empty
-    *    files) and must not reach the write paths — an "overwrite" of
-    *    nothing would leave a part-less directory whose later reads fail
-    *    schema inference, a permanently poisoned table path: returns Nil;
-    *  - a null partition source fails the action (see [[nullChecked]]);
-    *  - the pruned merge is only correct if a key's partitionSource never
-    *    changes (`README.rst:124`). Enforce the half that is checkable at
-    *    batch cost — two versions of one key with different partition
-    *    values in the SAME batch — including for the bootstrap batch, so a
-    *    violating key is rejected where it first enters the table, and
-    *    name the smallest such key in the error. (A cross-batch violation
-    *    cannot be detected without a by-key table scan; it remains a
-    *    documented contract.)
-    *
-    * Otherwise returns the distinct partition tuples (`partCols` order)
-    * the batch touches. Per key, `min`/`max` of the partition source
-    * differ exactly when the key has two values; one global aggregate
-    * then yields the smallest violating key and the tuples of the per-key
-    * partition sources — one exchange on the key and one to a single
-    * partition, both batch-sized. */
-  private def guard(df: DataFrame): Seq[Seq[String]] = {
-    val keyCols = recordKeys.map(col)
-    val perKey = nullChecked(df).groupBy(keyCols: _*)
-      .agg(min(col(partitionSource)).as(partitionSource),
-        max(col(partitionSource)).as("__hi"))
-    val g = LakeOps.derivePartitionColumns(perKey, partitionSource)
-      .agg(min(when(col(partitionSource) =!= col("__hi"), struct(keyCols: _*))),
-        collect_set(struct(partCols.map(col): _*)))
-      .head()
-    if (!g.isNullAt(0)) {
-      val offender = g.getStruct(0)
-      val named = recordKeys.zipWithIndex
-        .map { case (k, i) => s"$k=${offender.get(i)}" }.mkString(", ")
-      throw new IllegalArgumentException(
-        s"KeyedLakeTable($path): record key ($named) has multiple " +
-          s"$partitionSource values in one batch — the partition source " +
-          "must be immutable per key")
-    }
-    g.getSeq[org.apache.spark.sql.Row](1)
-      .map(t => partCols.indices.map(t.getString))
-  }
-
   /** Cluster rows by their target partition before the partitioned write:
     * without this every one of the N shuffle partitions drops a file into
     * every partition directory (N× small-file amplification, measured on
@@ -327,8 +254,9 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
   /** K1 — bootstrap: full overwrite of the table from a snapshot
     * (`initial_load.py:156-183`). */
   def overwrite(df: DataFrame): Unit = {
-    clustered(prep(df)).write
+    clustered(merge.prep(df)).write
       .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "static") // whatever the session says
       .partitionBy(partCols: _*)
       .parquet(path)
     bumpCommit(hadoopFs, path)
@@ -351,16 +279,8 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
     * and confirm a mismatch against the whole table's. After an evolving
     * write, untouched partitions still hold old-schema files, so [[read]]
     * footer-merges schemas across files. */
-  def upsert(df: DataFrame, evolveSchema: Boolean = false): Unit = {
-    // The batch feeds two actions (the guard, which also collects the
-    // touched partitions, and the merge). Persist it so the batch SOURCE —
-    // possibly a remote decompress-heavy read — is scanned once, not once
-    // per action; batches are bounded, so the cache is batch-sized by the
-    // same argument as the checkpoint in the merge.
-    val batch = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try { upsertPersisted(batch, evolveSchema, withChanges = false); () }
-    finally batch.unpersist(false)
-  }
+  def upsert(df: DataFrame, evolveSchema: Boolean = false): Unit =
+    persisted(df)(upsertPersisted(_, evolveSchema, withChanges = false))
 
   /** [[upsert]] that also RETURNS the merge's change feed: one row per
     * batch key with `change_type` ∈ insert | update | noop, the replaced
@@ -380,11 +300,8 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
     * Images carry the columns the touched partitions' files and the batch
     * SHARE (under `evolveSchema` a column the touched files lack is absent
     * from `old_image`, a dropped one from `new_image`). */
-  def upsertChanges(df: DataFrame, evolveSchema: Boolean = false): DataFrame = {
-    val batch = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try upsertPersisted(batch, evolveSchema, withChanges = true).get
-    finally batch.unpersist(false)
-  }
+  def upsertChanges(df: DataFrame, evolveSchema: Boolean = false): DataFrame =
+    persisted(df)(upsertPersisted(_, evolveSchema, withChanges = true).get)
 
   /** MERGE-ON-READ write (the Hudi MOR / Delta deletion-vector trade,
     * adapted to a latest-wins table): APPEND the batch's winning rows
@@ -414,33 +331,38 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
       s"KeyedLakeTable($path): deferred (merge-on-read) upserts need a " +
         "tieBreak — appended files have no arrival order, so equal " +
         "precombine values would pick a nondeterministic winner")
-    val batch = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val touched = guard(batch)
-      if (touched.isEmpty) return // empty batch: legitimate no-op
-      if (!exists) { overwrite(batch); return }
-      // one sampled footer, NOT a mergeSchema pass — deferred mode forbids
-      // evolution, so every file carries the same columns and the
-      // distributed footer-merge would cost more than the append itself —
-      // and memoized per handle: even the sampled read pays an O(dirs)
-      // partition-discovery listing (measured ~1 s on a 720-dir table)
-      if (deferredExpected == null)
-        deferredExpected = spark.read.parquet(path).columns.toSet
-      val expected = deferredExpected
-      val incomingCols = prep(batch).columns.toSet
-      require(incomingCols == expected,
-        s"KeyedLakeTable($path): deferred append schema mismatch — batch " +
-          s"yields ${incomingCols.toSeq.sorted.mkString(",")} vs table " +
-          s"${expected.toSeq.sorted.mkString(",")} (no evolution in " +
-          "merge-on-read mode)")
-      val rows = clustered(prep(batch))
-      val before = markerVersion()
-      rows.write
-        .mode(SaveMode.Append)
-        .partitionBy(partCols: _*)
-        .parquet(path)
-      refreshMemo(before, bumpCommit(hadoopFs, path), touched, rows.schema)
-    } finally batch.unpersist(false)
+    persisted(df) { batch =>
+      val touched = merge.guard(batch)
+      if (touched.isEmpty) () // empty batch: legitimate no-op
+      else if (!exists) overwrite(batch)
+      else appendDeferred(batch, touched)
+    }
+  }
+
+  /** The append of [[upsertDeferred]] into an existing table. */
+  private def appendDeferred(batch: DataFrame, touched: Seq[Seq[String]]): Unit = {
+    // one sampled footer, NOT a mergeSchema pass — deferred mode forbids
+    // evolution, so every file carries the same columns and the
+    // distributed footer-merge would cost more than the append itself —
+    // and memoized per handle: even the sampled read pays an O(dirs)
+    // partition-discovery listing (measured ~1 s on a 720-dir table)
+    if (deferredExpected == null)
+      deferredExpected = spark.read.parquet(path).columns.toSet
+    val expected = deferredExpected
+    val incoming = merge.prep(batch)
+    val incomingCols = incoming.columns.toSet
+    require(incomingCols == expected,
+      s"KeyedLakeTable($path): deferred append schema mismatch — batch " +
+        s"yields ${incomingCols.toSeq.sorted.mkString(",")} vs table " +
+        s"${expected.toSeq.sorted.mkString(",")} (no evolution in " +
+        "merge-on-read mode)")
+    val rows = clustered(incoming)
+    val before = markerVersion()
+    rows.write
+      .mode(SaveMode.Append)
+      .partitionBy(partCols: _*)
+      .parquet(path)
+    refreshMemo(before, bumpCommit(hadoopFs, path), touched, rows.schema)
   }
 
   @volatile private var deferredExpected: Set[String] = null
@@ -453,8 +375,7 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
     * always safe to use; it costs one keyed shuffle over the rows read
     * (partition-pruned reads prune the dedup's input identically). */
   def readMerged(): DataFrame =
-    LakeOps.latestWinsDedup(read(), recordKeys, precombine,
-      tieBreak.map(c => col(c).desc))
+    merge.dedup(read())
 
   /** [[readMerged]] minus tombstones — the MOR analog of [[readLive]]. */
   def readLiveMerged(): DataFrame = {
@@ -526,20 +447,20 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
 
   private def upsertPersisted(df: DataFrame, evolveSchema: Boolean,
       withChanges: Boolean): Option[DataFrame] = {
-    val touched = guard(df)
+    val touched = merge.guard(df)
     // changelog for the degenerate paths: vs an empty "existing" side,
     // every batch winner is an insert (vacuously empty for empty batches)
     def bootstrapChanges(): Option[DataFrame] =
       if (!withChanges) None
       else {
-        val inc = prep(df)
+        val inc = merge.prep(df)
         Some(changelog(inc.limit(0), inc).localCheckpoint(true))
       }
 
     if (touched.isEmpty) return bootstrapChanges() // empty batch
     if (!exists) { overwrite(df); return bootstrapChanges() }
 
-    val incoming = prep(df)
+    val incoming = merge.prep(df)
 
     // Read only the touched partition directories that already exist —
     // O(touched) FS calls, never a listing of the table root. `basePath`
@@ -568,15 +489,6 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
     val side = touchedSide.getOrElse(spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](), tableSchema))
 
-    // Union with a source-priority column. With no configured tieBreak,
-    // equal precombine values resolve for the incoming row (Hudi precombine
-    // tie behavior). With a tieBreak, the tieBreak is the total order — it
-    // must rank ABOVE __src, or equal-precombine versions of a key split
-    // across batches would resolve by arrival order and the merge result
-    // would depend on batching (ADVICE r2: batch-split invariance).
-    val srcTie =
-      if (tieBreak.isEmpty) Seq(col("__src").desc)
-      else tieBreak.map(c => col(c).desc) :+ col("__src").desc
     // Same-name-different-type is an error in BOTH modes: evolution adds
     // and omits columns, it never reinterprets one.
     val exTypes = tableSchema.map(f => f.name -> f.dataType).toMap
@@ -604,11 +516,8 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
           else lit(null).cast(f.dataType).as(f.name)): _*)
       }
 
-    val merged = LakeOps.latestWinsDedup(
-      existing.withColumn("__src", lit(0))
-        .unionByName(incoming.withColumn("__src", lit(1)),
-          allowMissingColumns = evolveSchema),
-      recordKeys, precombine, srcTie).drop("__src")
+    val merged = merge.latestWins(existing, incoming,
+      allowMissingColumns = evolveSchema)
 
     // The change feed must be computed (and materialized — it reads the
     // partitions the write below replaces) BEFORE the overwrite. The
@@ -621,8 +530,7 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
     // the same key the changelog join shuffles on.
     val changes =
       if (withChanges) Some(changelog(
-        LakeOps.latestWinsDedup(existing, recordKeys, precombine,
-          tieBreak.map(c => col(c).desc)),
+        merge.dedup(existing),
         incoming).localCheckpoint(true))
       else None
 
@@ -633,33 +541,14 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
     // table-sized.
     val materialized = merged.localCheckpoint(true)
 
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val before = markerVersion()
-      clustered(materialized).write
-        .mode(SaveMode.Overwrite)
-        .partitionBy(partCols: _*)
-        .parquet(path)
-      refreshMemo(before, bumpCommit(hadoopFs, path), touched, materialized.schema)
-    } finally prevMode match {
-      case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    val before = markerVersion()
+    clustered(materialized).write
+      .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCols: _*)
+      .parquet(path)
+    refreshMemo(before, bumpCommit(hadoopFs, path), touched, materialized.schema)
     changes
-  }
-
-  /** Normalize partition columns to the zero-padded strings the partition
-    * scheme is defined over. Spark's partition type inference would read
-    * `create_minute=04` back as int 4, and a merge would then write a
-    * *second* `create_minute=4` directory for the same logical partition —
-    * normalizing makes the table's schema independent of the session's
-    * `partitionColumnTypeInference` setting. */
-  private[sink] def normalizeParts(df: DataFrame): DataFrame = {
-    val widths = Map("create_year" -> 4).withDefaultValue(2)
-    partCols.foldLeft(df) { (d, c) =>
-      d.withColumn(c, lpad(col(c).cast("string"), widths(c), "0"))
-    }
   }
 
   /** Footer-merged read: after a schema-evolving upsert, partitions the

@@ -7,8 +7,6 @@ import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.{JsonMethods, Serialization}
 
-import graft.ops.LakeOps
-
 /** One commit. Three kinds:
   *  - FULL (`delta` absent/false): `partitions` is the complete
   *    partition→files map of the snapshot — self-contained, no replay.
@@ -126,12 +124,14 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
       (keyBloomBits >= 64 && (keyBloomBits & (keyBloomBits - 1)) == 0),
     s"keyBloomBits must be 0 (off) or a power of two >= 64, got $keyBloomBits")
   import spec._
+  import KeyedMerge.{normalizeParts, partCols, persisted}
+
+  private val merge = new KeyedMerge(spec, "VersionedLakeTable")
 
   private def indexed: Boolean = statsCols.nonEmpty || keyBloomBits > 0
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
   private implicit val formats: Formats = DefaultFormats
-  private val partCols = LakeOps.partitionCols
   private def commitsDir = Paths.get(path, "_commits")
 
   // ------------------------------------------------------------ manifests
@@ -345,24 +345,26 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
       val f = partKept.filter(p => stats.get(p).forall(keepFile))
       if (f.nonEmpty) (f, false) else (partKept.take(1), true)
     }
-    val byVersionDir = files
-      .groupBy(f => f.split('/').take(2).mkString("/")) // data/<n>
-    val df = byVersionDir.toSeq.sortBy(_._1)
+    val df = scan(files)
+    // all files pruned: keep the slice's schema, emit zero rows
+    val out = if (emptied) df.filter(lit(false)) else df
+    // merge-on-read: the resolved files hold multiple versions per key —
+    // one latest-wins dedup restores the merged state (partition-level
+    // pruning is key-complete: a key lives in exactly one partition)
+    if (mor) merge.dedup(out) else out
+  }
+
+  /** The rows of manifest-relative `files`: one parquet scan per version
+    * dir (`data/<n>`, its own basePath, so partition columns come from the
+    * dir names), unioned and normalized. */
+  private def scan(files: Seq[String]): DataFrame =
+    files.groupBy(_.split('/').take(2).mkString("/")).toSeq.sortBy(_._1)
       .map { case (vdir, fs) =>
         spark.read.option("basePath", s"$path/$vdir")
           .parquet(fs.map(f => s"$path/$f"): _*)
       }
       .reduce(_ unionByName _)
       .transform(normalizeParts)
-    // all files pruned: keep the slice's schema, emit zero rows
-    val out = if (emptied) df.filter(lit(false)) else df
-    // merge-on-read: the resolved files hold multiple versions per key —
-    // one latest-wins dedup restores the merged state (partition-level
-    // pruning is key-complete: a key lives in exactly one partition)
-    if (mor) LakeOps.latestWinsDedup(out, recordKeys, precombine,
-      tieBreak.map(c => col(c).desc))
-    else out
-  }
 
   /** Approximate row count of snapshot `version` from parquet FOOTER
     * metadata alone — O(files) footer reads, zero data pages. Exact for
@@ -542,12 +544,12 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
   // ----------------------------------------------------------- write side
 
   /** Keyed latest-wins merge committed as a NEW version; returns it.
-    * Same semantics as [[KeyedLakeTable.upsert]]: in-batch dedup, pruned
-    * read of touched partitions (manifest-resolved here), strictly-newer
-    * (precombine, tieBreak) wins, ties to the incoming row only without a
-    * tieBreak. Old versions stay readable until vacuumed. */
+    * Same rule as [[KeyedLakeTable.upsert]] ([[KeyedMerge]]): in-batch
+    * dedup, pruned read of touched partitions (manifest-resolved here),
+    * strictly-newer (precombine, tieBreak) wins, ties to the incoming row
+    * only without a tieBreak. Old versions stay readable until vacuumed. */
   def upsert(df: DataFrame): Int =
-    withPrepped(df)(upsertPrepped)
+    guarded(df)(upsertTouched)
 
   /** MERGE-ON-READ commit (the [[KeyedLakeTable.upsertDeferred]] trade
     * lifted into the commit log): APPEND the batch's winning rows as a
@@ -575,61 +577,30 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
       s"VersionedLakeTable($path): deferred (merge-on-read) commits need " +
         "a tieBreak — appended files have no arrival order, so equal " +
         "precombine values would pick a nondeterministic winner")
-    withPrepped(df)(appendPrepped)
+    guarded(df)(appendTouched)
   }
 
-  /** Null-guard, partition-immutability guard, partition derivation and
-    * in-batch latest-wins dedup — shared by the eager and deferred write
-    * paths; `f` runs against the persisted prepped batch. */
-  private def withPrepped[T](df: DataFrame)(f: DataFrame => T): T = {
-    val guarded = df.withColumn(partitionSource,
-      coalesce(col(partitionSource), raise_error(lit(
-        s"VersionedLakeTable($path): null $partitionSource in batch"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // The pruned merge is only correct if a key's partitionSource never
-      // changes (same contract as KeyedLakeTable). Without this guard the
-      // in-batch dedup would SILENTLY collapse a key carrying two
-      // partition values, and a cross-batch change would leave the old
-      // row carried forward in an untouched partition — a duplicate key
-      // in every later snapshot. Enforce the checkable half (within one
-      // batch) loudly, at batch cost; cross-batch stays a documented
-      // contract, exactly as in [[KeyedLakeTable]].
-      val offender = guarded
-        .groupBy(recordKeys.map(col): _*)
-        .agg(countDistinct(col(partitionSource)).as("__n"))
-        .filter(col("__n") > 1)
-        .limit(1).collect().headOption
-      offender.foreach { r =>
-        val key = recordKeys.zipWithIndex
-          .map { case (k, i) => s"$k=${r.get(i)}" }.mkString(", ")
-        throw new IllegalArgumentException(
-          s"VersionedLakeTable($path): key ($key) carries multiple " +
-            s"$partitionSource values in one batch — a key's partition " +
-            "must be immutable (README.rst:124 contract)")
-      }
-      val incoming = LakeOps.latestWinsDedup(
-        LakeOps.derivePartitionColumns(LakeOps.dropOp(guarded), partitionSource),
-        recordKeys, precombine, tieBreak.map(c => col(c).desc))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try f(incoming)
-      finally incoming.unpersist(false)
-    } finally guarded.unpersist(false)
-  }
+  /** `f` over the persisted raw batch and the partitions it touches, as
+    * relative partition paths — both from the one shared guard action
+    * ([[KeyedMerge.guard]]). An empty batch commits nothing and returns
+    * the current version. */
+  private def guarded(df: DataFrame)(f: (DataFrame, Set[String]) => Int): Int =
+    persisted(df) { batch =>
+      val touched = merge.guard(batch).map(t =>
+        partCols.zip(t).map { case (c, v) => s"$c=$v" }.mkString("/")).toSet
+      if (touched.nonEmpty) f(batch, touched)
+      else latestVersion.getOrElse(throw new IllegalStateException(
+        s"VersionedLakeTable($path): empty bootstrap batch"))
+    }
 
   /** The deferred write path: stage the prepped batch as-is (no table
     * read, no merge), claim a slot under the standard OCC rules, commit
     * an APPEND manifest. Bootstrap falls through to the eager path (the
     * first commit is a full checkpoint either way). */
-  private def appendPrepped(incoming: DataFrame): Int = {
-    val touched = incoming.select(partCols.map(col): _*).distinct().collect()
-      .map(partitionRelPath).toSet
+  private def appendTouched(batch: DataFrame, touched: Set[String]): Int = {
     val curV = latestVersion
-    if (touched.isEmpty)
-      return curV.getOrElse(throw new IllegalStateException(
-        s"VersionedLakeTable($path): empty bootstrap batch"))
-    if (curV.isEmpty) return upsertPrepped(incoming)
-    val stage = stageWrite(incoming)
+    if (curV.isEmpty) return upsertTouched(batch, touched)
+    val stage = stageWrite(merge.prep(batch))
     val written = listWritten(stage)
     require(written.keySet == touched,
       s"VersionedLakeTable($path): wrote partitions ${written.keySet} " +
@@ -662,19 +633,10 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
         touched = ourTouched, append = Some(true)))
   }
 
-  private def partitionRelPath(r: org.apache.spark.sql.Row): String =
-    partCols.zipWithIndex
-      .map { case (c, i) => s"$c=${r.getString(i)}" }.mkString("/")
-
-  private def upsertPrepped(incoming: DataFrame): Int = {
-    val touched = incoming.select(partCols.map(col): _*).distinct().collect()
-      .map(partitionRelPath).toSet
+  private def upsertTouched(batch: DataFrame, touched: Set[String]): Int = {
     val curV = latestVersion
-    if (touched.isEmpty) // empty batch: no new version, nothing written
-      return curV.getOrElse(
-        throw new IllegalStateException(
-          s"VersionedLakeTable($path): empty bootstrap batch"))
     val current = curV.map(resolved)
+    val incoming = merge.prep(batch)
 
     // File-slice pruning through the key Bloom index (the Hudi bloom-index
     // role, `incremental.py`'s upsert-target location): among the touched
@@ -690,7 +652,7 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
     }
     val carried: Map[String, Seq[String]] =
       if (keyBloomBits == 0 || touchedFiles.isEmpty) Map.empty
-      else batchKeyHashes(incoming) match {
+      else batchKeyHashes(batch) match {
         case None => Map.empty // over the probe cap: read everything
         case Some(hs) =>
           val stats = statsFor(touchedFiles.values.flatten.toSeq)
@@ -701,34 +663,10 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
       }
     val carriedSet: Set[String] = carried.values.flatten.toSet
 
-    val merged = current match {
-      case None => incoming
-      case Some(parts) =>
-        val files = touchedFiles.values.flatten.toSeq
-          .filterNot(carriedSet)
-        if (files.isEmpty) incoming
-        else {
-          val byVersionDir = files.groupBy(_.split('/').take(2).mkString("/"))
-          val existing = byVersionDir.toSeq.sortBy(_._1)
-            .map { case (vdir, fs) =>
-              spark.read.option("basePath", s"$path/$vdir")
-                .parquet(fs.map(f => s"$path/$f"): _*)
-            }
-            .reduce(_ unionByName _)
-            .transform(normalizeParts)
-          val srcTie =
-            if (tieBreak.isEmpty) Seq(col("__src").desc)
-            else tieBreak.map(c => col(c).desc) :+ col("__src").desc
-          val cols = incoming.columns
-          LakeOps.latestWinsDedup(
-            existing.withColumn("__src", lit(0))
-              .select((cols :+ "__src").map(col): _*)
-              .unionByName(incoming.withColumn("__src", lit(1))
-                .select((cols :+ "__src").map(col): _*)),
-            recordKeys, precombine, srcTie)
-            .drop("__src")
-        }
-    }
+    val files = touchedFiles.values.flatten.toSeq.filterNot(carriedSet)
+    val merged =
+      if (files.isEmpty) incoming // bootstrap, new partitions or all carried
+      else merge.latestWins(scan(files), incoming, allowMissingColumns = false)
 
     // immutable-file contract + optimistic concurrency: stage the new
     // state (plus the intent marker) under a unique hidden dir, then
@@ -1116,11 +1054,4 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
     * `spark.sql` for this session — `AS OF` queries by view name. */
   def registerAs(name: String, version: Option[Int] = None): Unit =
     read(version).createOrReplaceTempView(name)
-
-  private def normalizeParts(df: DataFrame): DataFrame = {
-    val widths = Map("create_year" -> 4).withDefaultValue(2)
-    partCols.foldLeft(df) { (d, c) =>
-      d.withColumn(c, lpad(col(c).cast("string"), widths(c), "0"))
-    }
-  }
 }

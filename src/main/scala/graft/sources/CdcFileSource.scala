@@ -57,13 +57,13 @@ object CdcFileSource {
     // one empty call do millions of probes). Cost is O(directories that
     // exist inside the window) and the lazy take(maxFiles) stops the walk
     // as soon as the batch is full.
-    val eligible = walkEligible(fs, root, after, until)
+    val eligible = walkEligible(fs, root, after, Some(until))
       .take(maxFiles)
       .toSeq
 
     if (eligible.nonEmpty)
       Todo(eligible.map(_._2), eligible.lastOption.map(_._1))
-    else findNextAfter(fs, root, after) match {
+    else walkEligible(fs, root, after, None).nextOption().map(_._1) match {
       case Some(next) if next.isAfter(until) =>
         // The window is genuinely empty but the stream has progressed past
         // it: advance the checkpoint (the reference advances by
@@ -86,11 +86,13 @@ object CdcFileSource {
     * iterator over a range-pruned lexicographic walk (year→month→day→hour):
     * a directory is descended only if its zero-padded path prefix can still
     * contain a key inside the window, and leaf listings stream so a
-    * downstream `take(n)` stops the walk early. */
+    * downstream `take(n)` stops the walk early. `until = None` leaves the
+    * window open above: the empty-window path takes the first file after
+    * `after` at O(directories on the frontier path). */
   private def walkEligible(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      after: LocalDateTime, until: LocalDateTime): Iterator[(LocalDateTime, String)] = {
+      after: LocalDateTime, until: Option[LocalDateTime]): Iterator[(LocalDateTime, String)] = {
     val afterKey = TimeCodec.datetimeToS3Key(after)
-    val untilKey = TimeCodec.datetimeToS3Key(until)
+    val untilKey = until.map(TimeCodec.datetimeToS3Key)
     def walk(dir: Path, depth: Int, prefix: String): Iterator[(LocalDateTime, String)] =
       if (depth == 4)
         fs.listStatus(dir).iterator.filter(_.isFile)
@@ -98,52 +100,20 @@ object CdcFileSource {
           .filter(_.endsWith(".parquet"))
           .filterNot(p => p.substring(p.lastIndexOf('/') + 1).startsWith("LOAD"))
           .flatMap(p => scala.util.Try(TimeCodec.filenameToDatetime(p)).toOption
-            .filter(d => d.isAfter(after) && !d.isAfter(until))
+            .filter(d => d.isAfter(after) && !until.exists(d.isAfter))
             .map(d => (d, p)))
           .toSeq.sortBy(_._2).iterator // key order == chronological order
       else {
         val lo = afterKey.split('/').take(depth + 1).mkString("/")
-        val hi = untilKey.split('/').take(depth + 1).mkString("/")
+        val hi = untilKey.map(_.split('/').take(depth + 1).mkString("/"))
         fs.listStatus(dir).toSeq.filter(_.isDirectory)
           .sortBy(_.getPath.getName).iterator
           .map(c => (c.getPath,
             s"$prefix${if (prefix.isEmpty) "" else "/"}${c.getPath.getName}"))
           .filter { case (_, p) =>
-            p >= lo.take(p.length) && p <= hi.take(p.length) }
+            p >= lo.take(p.length) && hi.forall(h => p <= h.take(p.length)) }
           .flatMap { case (d, p) => walk(d, depth + 1, p) }
       }
-    walk(root, 0, "")
-  }
-
-  /** First eligible CDC file strictly after `after`, unbounded — a
-    * directory-pruned lexicographic walk (year→month→day→hour), so the cost
-    * is O(directories on the frontier path), not O(files). Used only on the
-    * empty-window path. */
-  private def findNextAfter(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      after: LocalDateTime): Option[LocalDateTime] = {
-    val afterKey = TimeCodec.datetimeToS3Key(after)
-    def walk(dir: Path, depth: Int, prefix: String): Option[LocalDateTime] = {
-      if (!fs.exists(dir)) return None
-      val children = fs.listStatus(dir).toSeq.sortBy(_.getPath.getName)
-      if (depth == 4) {
-        children.filter(_.isFile).map(_.getPath.toString)
-          .filter(_.endsWith(".parquet"))
-          .filterNot(p => p.substring(p.lastIndexOf('/') + 1).startsWith("LOAD"))
-          .flatMap(p => scala.util.Try(TimeCodec.filenameToDatetime(p)).toOption)
-          .filter(_.isAfter(after))
-          .sorted(Ordering.fromLessThan[LocalDateTime](_ isBefore _))
-          .headOption
-      } else {
-        // keep only directories whose path prefix can still contain a key
-        // >= afterKey (zero-padded names make string compare correct)
-        val afterPrefix = afterKey.split('/').take(depth + 1).mkString("/")
-        children.filter(_.isDirectory).iterator
-          .map(c => (c.getPath, s"$prefix${if (prefix.isEmpty) "" else "/"}${c.getPath.getName}"))
-          .filter { case (_, p) => p >= afterPrefix.take(p.length) }
-          .flatMap { case (d, p) => walk(d, depth + 1, p) }
-          .take(1).toSeq.headOption
-      }
-    }
     walk(root, 0, "")
   }
 }

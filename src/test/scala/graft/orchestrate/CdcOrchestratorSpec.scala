@@ -79,6 +79,39 @@ class CdcOrchestratorSpec extends AnyFunSuite with SparkSpec {
     assert((System.nanoTime() - t1) / 1000000 < 2000)
   }
 
+  test("an empty window advances toward a next file in a later year") {
+    val root = tmpDir("cdc-next-year")
+    def touch(rel: String): Unit = {
+      val p = Paths.get(root, rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, Array[Byte]())
+    }
+    touch("2024/12/31/22/20241231-220000000.parquet") // before the checkpoint
+    touch("2026/03/01/10/LOAD00000002.parquet")        // full-load: not a CDC file
+    touch("2026/03/01/10/20260301-100000000.parquet")  // the next CDC file
+    val after = LocalDateTime.of(2024, 12, 31, 23, 0)
+    val hour = 3600L
+    val todo = CdcFileSource.listTodo(
+      spark.sparkContext.hadoopConfiguration, root, after,
+      maxFiles = 10, maxIntervalSeconds = hour)
+    assert(todo.files.isEmpty)
+    // one step across the gap, leaving the file inside the next window
+    val next = LocalDateTime.of(2026, 3, 1, 10, 0)
+    val end = todo.endUntil.get
+    assert(end.isBefore(next) && !end.plusSeconds(hour).isBefore(next), end)
+    assert(java.time.Duration.between(after, end).getSeconds % hour === 0)
+    val planned = CdcFileSource.listTodo(
+      spark.sparkContext.hadoopConfiguration, root, end,
+      maxFiles = 10, maxIntervalSeconds = hour)
+    assert(planned.files.map(f => f.substring(f.lastIndexOf('/') + 1)) ===
+      Seq("20260301-100000000.parquet"))
+    // with no later file the window stays where it is
+    val last = CdcFileSource.listTodo(
+      spark.sparkContext.hadoopConfiguration, root, next,
+      maxFiles = 10, maxIntervalSeconds = hour)
+    assert(last.files.isEmpty && last.endUntil.isEmpty)
+  }
+
   /** Builds LOAD + 1-minute CDC buckets; returns the snapshot cut (µs). */
   private def buildTxnTree(log: Workload.Log, root: String): Long = {
     val txns = log.txns.toDF()

@@ -131,6 +131,31 @@ class KeyedLakeTableSpec extends AnyFunSuite with SparkSpec {
     assert(asState(table.read()) === expected.toSet)
   }
 
+  test("overwrite replaces the whole table even when the session's " +
+    "partition overwrite mode is dynamic") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "dynamic")
+    try {
+      def txn(id: String, createAt: String) =
+        Workload.Txn(id, "a1", createAt, createAt, "fuel", 1, 0, id)
+      val jan = txn("jan", "2024-01-01T00:00:01.000000+0000")
+      val feb = txn("feb", "2024-02-01T00:00:01.000000+0000")
+      val table = newTable()
+      table.overwrite(Seq(jan).toDF())
+      table.overwrite(Seq(feb).toDF()) // lands only in a new partition
+      def ids() = table.read().select("id").as[String].collect().toSet
+      assert(ids() === Set("feb"))
+      // the upsert still rewrites only the partition it touches
+      table.upsert(Seq(jan).toDF())
+      assert(ids() === Set("jan", "feb"))
+      assert(spark.conf.get(key) === "dynamic", "the session's mode is its own")
+    } finally prev match {
+      case Some(m) => spark.conf.set(key, m)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("a null partition source fails the batch loudly instead of corrupting") {
     val table = newTable()
     table.overwrite(Seq(
@@ -458,7 +483,7 @@ class KeyedLakeTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   /** The table read without any memo: what `read()` must equal. */
-  private def freshRead(table: KeyedLakeTable): DataFrame = table.normalizeParts(
+  private def freshRead(table: KeyedLakeTable): DataFrame = KeyedMerge.normalizeParts(
     spark.read.option("mergeSchema", "true").parquet(table.spec.path))
 
   /** `got` equals a fresh read of `table` in schema (names, types and

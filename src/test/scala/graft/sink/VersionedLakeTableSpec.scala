@@ -3,7 +3,7 @@ package graft.sink
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{Profile, SparkSpec}
 import graft.ops.LakeOps
 import graft.oracle.Workload
 
@@ -467,5 +467,25 @@ class VersionedLakeTableSpec extends AnyFunSuite with SparkSpec {
     // compaction restores exactness
     table.compactSnapshot()
     assert(table.approxRowCount() === table.read().count())
+  }
+
+  test("an upsert of a 2-partition batch runs one guard action, no " +
+    "separate partition collect") {
+    val table = newTable()
+    def txn(id: String, minute: Int, update: String, note: String) =
+      Workload.Txn(id, "a1", f"2024-01-01T00:$minute%02d:01.000000+0000",
+        update, "fuel", 1, 0, note)
+    val t0 = "2024-01-01T01:00:00.000000+0000"
+    val t1 = "2024-01-01T02:00:00.000000+0000"
+    table.upsert(Seq(txn("k1", 1, t0, "a"), txn("k2", 2, t0, "b"),
+      txn("k3", 3, t0, "c")).toDF())
+    val batch = Seq(txn("k1", 1, t1, "a2"), txn("k2", 2, t1, "b2")).toDF()
+    val report = Profile.profile(spark)(table.upsert(batch))._2
+    // two actions — the shared guard and the staged write — in 9 jobs; a
+    // separate guard action and a distinct-partition collect made it 3
+    // actions and 12 jobs
+    assert(report.plans.size === 2, report.render("versioned upsert"))
+    assert(report.jobs <= 9, report.render("versioned upsert"))
+    assert(state(table.read()).map(_.note) === Set("a2", "b2", "c"))
   }
 }
