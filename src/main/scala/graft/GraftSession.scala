@@ -28,6 +28,17 @@ import org.apache.spark.sql.SparkSession
   *    bench scale.
   *  - UTC session timezone and `legacy.parquet.nanosAsLong` pin the
   *    driver corpus's timestamp vintages to one reading.
+  *  - `codegen.cache.maxEntries = 1000` (default 100): Spark keys its
+  *    generated-class cache by (thread context classloader, source), and
+  *    the driver and the task threads use different loaders, so every
+  *    whole-stage class takes two entries. Do not drop it as a no-op: one
+  *    lakebench graph_rank round (`PageRank.run(iters = 5)`,
+  *    `Triangles.total`, SQL) holds 141 entries after its warm-up, so at
+  *    100 the LRU evicts the whole working set every round. A warm round
+  *    compiled 83 classes at 100 and 0 at 1000 (seed 301; pinned by
+  *    CodegenCacheSpec). It is a static conf that `CodeGenerator` reads
+  *    once per JVM, so it takes effect only on the builder that creates
+  *    the JVM's first session.
   */
 object GraftSession {
 
@@ -42,6 +53,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.columnarReaderBatchSize", "16384")
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   /** A local[cpus] session with the engine defaults — the CLI mains'
     * entry point. */

@@ -5,8 +5,10 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.graft.ListenerBridge
@@ -18,10 +20,13 @@ import graft.bench.{MaintenanceBench, ScaleBench}
   * own Spark job group and reports where its time went: per-stage task
   * figures, the number of jobs, wall time, and driver time — wall minus
   * the union of the body's job intervals, i.e. listing, planning and
-  * driver-side work between actions. It also keeps the executed plan of
-  * every action the body ran; under AQE that is the final, re-optimized
-  * plan (`isFinalPlan=true`), so exchange widths and join strategies are
-  * the ones that actually ran.
+  * driver-side work between actions — and the number of generated
+  * classes compiled meanwhile, with their compile time (a warm pass whose
+  * classes all hit Spark's codegen cache compiles none; these two are
+  * JVM-wide, so a concurrent body on another session counts too). It
+  * also keeps the executed plan of every action the body ran; under AQE
+  * that is the final, re-optimized plan (`isFinalPlan=true`), so exchange
+  * widths and join strategies are the ones that actually ran.
   *
   * `main` profiles bench entries by name: any [[SparkEntry.queries]] key
   * (materialized through the `noop` sink, as `graft.Bench` times it) or
@@ -45,8 +50,11 @@ object Profile {
       gcMs: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
       memSpillBytes: Long, diskSpillBytes: Long)
 
+  /** `compiled` is the number of generated classes compiled during the
+    * body and `compileS` their compile seconds. */
   final case class Report(stages: Seq[Stage], jobs: Int, wallS: Double,
-      driverS: Double, plans: Seq[String]) {
+      driverS: Double, compiled: Long, compileS: Double,
+      plans: Seq[String]) {
 
     /** The entry's header line, the stage table with a `total` row, and
       * each action's final plan. */
@@ -66,8 +74,9 @@ object Profile {
         row("total", stages.map(_.tasks).sum.toString, stages, "")
       val planText = plans.zipWithIndex.map { case (p, i) =>
         s"-- action ${i + 1}/${plans.size}: $p" }
-      (f"== $title: jobs=$jobs wall=$wallS%.3f s driver=$driverS%.3f s" +:
-        (table ++ planText)).mkString("\n")
+      val header = f"== $title: jobs=$jobs wall=$wallS%.3f s " +
+        f"driver=$driverS%.3f s compiled=$compiled compile=$compileS%.3f s"
+      (header +: (table ++ planText)).mkString("\n")
     }
   }
 
@@ -148,6 +157,8 @@ object Profile {
     spark.listenerManager.register(planListener)
     val saved = Seq(GroupKey, "spark.job.description",
       "spark.job.interruptOnCancel").map(k => k -> sc.getLocalProperty(k))
+    val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     val t0Ms = System.currentTimeMillis()
     val t0 = System.nanoTime()
     try {
@@ -156,13 +167,16 @@ object Profile {
         try body
         finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
       val wallS = (System.nanoTime() - t0) / 1e9
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+      val compileS = (CodeGenerator.compileTime - compileNs0) / 1e9
       val t1Ms = System.currentTimeMillis()
       ListenerBridge.drain(sc)
       val iv = jobs.values.asScala.toSeq
       val covered =
         union(iv.map { case (s, e) => (s.max(t0Ms), e.min(t1Ms)) })
       (out, Report(stages.asScala.toSeq.sortBy(_.id), iv.size, wallS,
-        math.max(0.0, wallS - covered / 1000.0), plans.asScala.toSeq))
+        math.max(0.0, wallS - covered / 1000.0), compiled, compileS,
+        plans.asScala.toSeq))
     } finally {
       spark.listenerManager.unregister(planListener)
       sc.removeSparkListener(listener)

@@ -1,20 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contract of the sum(decimal)→unscaled-long optimizer rule: fires on the
   * eligible shape (and only there), is disable-able, and never changes the
   * result — checked by value against the same query with the rule off. */
-class DecimalSumFastPathSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("DecimalSumFastPathSpec").getOrCreate()
+class DecimalSumFastPathSpec extends AnyFunSuite with SparkSpec {
 
   import spark.implicits._
 

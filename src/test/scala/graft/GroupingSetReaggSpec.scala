@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * identical to the native (rule-off) plan — including data NULLs in the
   * grouping dims, grouping_id(), min/max, cube, named grouping sets, and
   * empty input. */
-class GroupingSetReaggSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("GroupingSetReaggSpec").getOrCreate()
+class GroupingSetReaggSpec extends AnyFunSuite with SparkSpec {
 
   import spark.implicits._
 

@@ -38,6 +38,14 @@ class ProfileSpec extends AnyFunSuite with SparkSpec {
       assert(r.wallS >= r.driverS && r.driverS >= 0.0)
       assert(r.plans.size === 1)
       assert(r.plans.head.contains("isFinalPlan=true"), r.plans.head)
+      // a cold plan compiles its generated classes; the same plan run
+      // again is served from Spark's codegen cache
+      assert(r.compiled > 0 && r.compileS > 0.0, r.render("groupBy"))
+      assert(r.render("groupBy").takeWhile(_ != '\n')
+        .contains(f"compiled=${r.compiled} compile=${r.compileS}%.3f s"))
+      val warm = Profile.profile(spark)(df.collect())._2
+      assert(warm.compiled === 0L && warm.compileS === 0.0,
+        warm.render("warm groupBy"))
     } finally sc.removeSparkListener(counter)
   }
 }

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.graph.PageRank
+import graft.queries.PipelineQueries
 
 /** Contract of the fixed-point PageRank: bit-identical to an independent
   * in-memory reference model on a hand graph, invariant to partitioning
@@ -182,6 +183,14 @@ class PageRankSpec extends AnyFunSuite {
       assert(!cache.isEmpty, s"$name: the result is returned cached")
       r.unpersist(blocking = true)
       assert(cache.isEmpty, s"$name: frames left cached after unpersist")
+    }
+    // the rank queries' callers never unpersist: they get an uncached copy
+    val dir = "/root/testdata/sf0.001"
+    for ((name, q) <- Seq("q161" -> PipelineQueries.q161Pagerank _,
+        "q167" -> PipelineQueries.q167PprTrust _)) {
+      val ranks = q(spark, dir)
+      assert(cache.isEmpty, s"$name: a rank frame is left cached")
+      assert(ranks.count() > 0)
     }
   }
 
