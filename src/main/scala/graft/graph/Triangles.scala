@@ -176,15 +176,6 @@ object Triangles {
       .groupBy("node").agg(count(lit(1)).as("n_triangles"))
   }
 
-  /** The wedge-join form (Suri–Vassilvitskii as literal joins) — the
-    * SPARSE-regime winner (see [[perNode]]): materializes every wedge
-    * (u;v,w) through a hash exchange and closes it with a (v,w) join;
-    * on sparse graphs the wedge set is ~linear in m and this beats the
-    * intersection form's collect_list + array-carrying joins. */
-  private[graft] def perNodeWedge(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst"): DataFrame =
-    perNodeWedgeFromCanonical(canonical(edges, srcCol, dstCol))
-
   /** Partition count for the wedge path's exchanges, derived from the
     * graph's estimated source bytes (guide §2.1/§5: size partitions to
     * DATA, not to the machine): one partition per ~4 MB of input so the
@@ -211,6 +202,11 @@ object Triangles {
       }
   }
 
+  /** The wedge-join form (Suri–Vassilvitskii as literal joins) — the
+    * SPARSE-regime winner (see [[perNode]]): materializes every wedge
+    * (u;v,w) through a hash exchange and closes it with a (v,w) join;
+    * on sparse graphs the wedge set is ~linear in m and this beats the
+    * intersection form's collect_list + array-carrying joins. */
   private def perNodeWedgeFromCanonical(und: DataFrame): DataFrame = {
     val n = wedgePartitions(und)
     val ori = oriented(und)

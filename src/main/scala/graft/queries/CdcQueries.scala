@@ -34,7 +34,6 @@ object CdcQueries {
     * longs; the NTZ cast is wall-clock-preserving because every graft
     * session pins `spark.sql.session.timeZone=UTC`. */
   private[graft] def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = Tables.load(s, dir, "events")
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     val tsUs = raw.schema("ts").dataType match {
@@ -236,7 +235,6 @@ object CdcQueries {
       |ORDER BY event_type""".stripMargin
 
   def q27SqlSurface(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     QueryEngine.registerCorpus(s, dir)
     QueryEngine.sql(s, sharedSql)
   }
@@ -246,7 +244,6 @@ object CdcQueries {
   // ---------------------------------------------------------------- q28
   /** A2 — COUNT(*) through the catalog (`athena.py:81-86`). */
   def q28CountRows(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     QueryEngine.registerCorpus(s, dir)
     QueryEngine.countRows(s, "events")
   }
@@ -372,7 +369,6 @@ object CdcQueries {
     * reference's per-file/manifest count checks, `athena.py:81-86`,
     * `vendor/aws_dynamodb_export_to_s3.py:339-345`). */
   def q34TableCounts(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Tables.names.map { t =>
       // constant aggregate, NOT groupBy on a literal: an empty table must
       // still yield one row with n_rows=0, like the oracle's COUNT(*)
@@ -429,7 +425,6 @@ object CdcQueries {
   // ---------------------------------------------------------------- q36
   /** K5 — UNLOAD: materialize a SQL result to parquet, read it back. */
   def q36Unload(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     QueryEngine.registerCorpus(s, dir)
     val out = Files.createTempDirectory("graft_q36_unload").toString + "/result"
     QueryEngine.unload(s,
@@ -544,7 +539,6 @@ object CdcQueries {
       |ORDER BY r.rnk, e.event_type""".stripMargin
 
   def q37SqlCte(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     QueryEngine.registerCorpus(s, dir)
     QueryEngine.sql(s, cteSparkSql)
   }
@@ -646,7 +640,6 @@ object CdcQueries {
     * survive the CSV write/read unchanged (doubles round-trip losslessly
     * through Java's shortest-repr formatting). */
   def q59PreviewCsv(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     QueryEngine.registerCorpus(s, dir)
     val preview = QueryEngine.preview(s, "events", n = 10)
     require(preview.count() == 10, "preview must return exactly LIMIT rows")

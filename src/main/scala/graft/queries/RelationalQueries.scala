@@ -668,7 +668,6 @@ object RelationalQueries {
     * items strictly below their part's maximum quantity. MAX keeps the
     * threshold exact, so the row set is engine-independent. */
   def q15CorrelatedSubquery(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.Tables.registerAll(s, dir)
     s.sql(q15CorrelatedSubquerySql)
   }

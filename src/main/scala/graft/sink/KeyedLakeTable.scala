@@ -242,26 +242,41 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
       rel.dataSchema, rel.bucketSpec, rel.fileFormat, rel.options)(spark))
   }
 
-  /** Cluster rows by their target partition before the partitioned write:
-    * without this every one of the N shuffle partitions drops a file into
-    * every partition directory (N× small-file amplification, measured on
-    * the bench). One shuffle, one file per partition. At sizes where one
-    * file per partition is too coarse, add a within-partition salt here to
+  /** The one commit of every write mode: the partitioned write of `rows`,
+    * then a bumped commit marker, then the memo. `touched` = None is a
+    * static overwrite of the whole table — every partition may have
+    * changed, so the memo entry is dropped. Otherwise the write replaces
+    * (dynamic partition overwrite) or, with `append`, extends exactly the
+    * `touched` partition directories, and [[refreshMemo]] carries the
+    * entry over them.
+    *
+    * The rows are clustered by their target partition first: without
+    * this every one of the N shuffle partitions drops a file into every
+    * partition directory (N× small-file amplification, measured on the
+    * bench). One shuffle, one file per partition. At sizes where one file
+    * per partition is too coarse, add a within-partition salt here to
     * bound file size — the write pattern stays the same. */
-  private def clustered(df: DataFrame): DataFrame =
-    df.repartition(partCols.map(col): _*)
+  private def commitWrite(rows: DataFrame, touched: Option[Seq[Seq[String]]],
+      append: Boolean = false): Unit = {
+    val before = if (touched.isEmpty) None else markerVersion()
+    rows.repartition(partCols.map(col): _*).write
+      .mode(if (append) SaveMode.Append else SaveMode.Overwrite)
+      // whatever the session says; an append ignores it
+      .option("partitionOverwriteMode",
+        if (touched.isEmpty) "static" else "dynamic")
+      .partitionBy(partCols: _*)
+      .parquet(path)
+    val token = bumpCommit(hadoopFs, path)
+    touched match {
+      case Some(t) => refreshMemo(before, token, t, rows.schema)
+      case None => readMemo.remove(memoKey)
+    }
+  }
 
   /** K1 — bootstrap: full overwrite of the table from a snapshot
     * (`initial_load.py:156-183`). */
-  def overwrite(df: DataFrame): Unit = {
-    clustered(merge.prep(df)).write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "static") // whatever the session says
-      .partitionBy(partCols: _*)
-      .parquet(path)
-    bumpCommit(hadoopFs, path)
-    readMemo.remove(memoKey) // every partition may have changed
-  }
+  def overwrite(df: DataFrame): Unit =
+    commitWrite(merge.prep(df), touched = None)
 
   /** K2/J1/U1 — incremental keyed merge: update-if-exists-else-insert with
     * latest-wins precombine, ties resolved for the incoming row
@@ -356,13 +371,7 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
         s"yields ${incomingCols.toSeq.sorted.mkString(",")} vs table " +
         s"${expected.toSeq.sorted.mkString(",")} (no evolution in " +
         "merge-on-read mode)")
-    val rows = clustered(incoming)
-    val before = markerVersion()
-    rows.write
-      .mode(SaveMode.Append)
-      .partitionBy(partCols: _*)
-      .parquet(path)
-    refreshMemo(before, bumpCommit(hadoopFs, path), touched, rows.schema)
+    commitWrite(incoming, Some(touched), append = true)
   }
 
   @volatile private var deferredExpected: Set[String] = null
@@ -539,15 +548,7 @@ final class KeyedLakeTable(spark: SparkSession, val spec: LakeTableSpec) {
     // whose plan still scans the destination). Touched partitions are
     // bounded by the batch, so the checkpoint is batch-sized, not
     // table-sized.
-    val materialized = merged.localCheckpoint(true)
-
-    val before = markerVersion()
-    clustered(materialized).write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCols: _*)
-      .parquet(path)
-    refreshMemo(before, bumpCommit(hadoopFs, path), touched, materialized.schema)
+    commitWrite(merged.localCheckpoint(true), Some(touched))
     changes
   }
 

@@ -217,13 +217,20 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
     }
     require(full, s"VersionedLakeTable($path): commit $v resolves through " +
       "deltas with no full checkpoint beneath — corrupt or over-vacuumed log")
-    chain.reverse.foldLeft(Map.empty[String, Seq[String]]) { (acc, m) =>
-      if (m.isAppend)
-        m.partitions.foldLeft(acc) { case (a, (p, fs)) =>
-          a.updated(p, a.getOrElse(p, Nil) ++ fs) }
-      else acc ++ m.partitions
-    }
+    chain.reverse.foldLeft(Map.empty[String, Seq[String]])(replay)
   }
+
+  /** `m` applied to the partition→files state of its predecessor — the
+    * one replay rule of the log: an APPEND delta extends its partitions'
+    * file lists (every stored version stays referenced), a delta replaces
+    * its entries, and a full manifest replaces everything. */
+  private def replay(acc: Map[String, Seq[String]],
+      m: CommitManifest): Map[String, Seq[String]] =
+    if (!m.isDelta) m.partitions
+    else if (m.isAppend)
+      m.partitions.foldLeft(acc) { case (a, (p, fs)) =>
+        a.updated(p, a.getOrElse(p, Nil) ++ fs) }
+    else acc ++ m.partitions
 
   /** Does `v`'s resolve chain contain APPEND commits? When true, the
     * snapshot's files hold multiple versions per key and readers must
@@ -417,15 +424,8 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
     val files = resolved(v).values.flatten.toSeq
     val stats = statsFor(files)
     val (have, missing) = files.partition(stats.contains)
-    val metaCount = have.iterator.map(stats(_).rows).sum
-    val scanCount =
-      if (missing.isEmpty) 0L
-      else missing.groupBy(_.split('/').take(2).mkString("/")).toSeq
-        .map { case (vdir, fs) =>
-          spark.read.option("basePath", s"$path/$vdir")
-            .parquet(fs.map(f => s"$path/$f"): _*).count()
-        }.sum
-    metaCount + scanCount
+    have.iterator.map(stats(_).rows).sum +
+      (if (missing.isEmpty) 0L else scan(missing).count())
   }
 
   /** Point lookup through the per-file key Bloom index (the Hudi
@@ -481,19 +481,17 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
     require(missing.isEmpty,
       s"VersionedLakeTable($path): probe frame lacks record-key " +
         s"column(s) ${missing.mkString(", ")}")
-    val hs = probeKeys.select(
-      xxhash64(concat_ws("\u0000",
-        recordKeys.map(c => col(c).cast("string")): _*)).as("__h"))
-      .distinct().limit(maxKeys + 1).collect().map(_.getLong(0))
-    if (hs.length > maxKeys) {
-      log.warn(s"VersionedLakeTable($path): readForJoin probe side " +
-        s"exceeds $maxKeys distinct keys — reading the full snapshot " +
-        "(correct, unpruned); raise maxKeys or pre-aggregate the probe")
-      read(version)
-    } else readWhereStatsInternal(version, _ => true,
-      keepFile = fs => hs.exists(h =>
-        fs.mayContainHash(keyBloomBits, FileStatsIndex.DefaultBloomK, h)),
-      filePruneKeyComplete = true)
+    keyHashes(probeKeys, maxKeys) match {
+      case None =>
+        log.warn(s"VersionedLakeTable($path): readForJoin probe side " +
+          s"exceeds $maxKeys distinct keys — reading the full snapshot " +
+          "(correct, unpruned); raise maxKeys or pre-aggregate the probe")
+        read(version)
+      case Some(hs) => readWhereStatsInternal(version, _ => true,
+        keepFile = fs => hs.exists(h =>
+          fs.mayContainHash(keyBloomBits, FileStatsIndex.DefaultBloomK, h)),
+        filePruneKeyComplete = true)
+    }
   }
 
   /** [[readForJoin]]'s sibling for an equi-join on a NON-key column that
@@ -599,38 +597,9 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
     * first commit is a full checkpoint either way). */
   private def appendTouched(batch: DataFrame, touched: Set[String]): Int = {
     val curV = latestVersion
-    if (curV.isEmpty) return upsertTouched(batch, touched)
-    val stage = stageWrite(merge.prep(batch))
-    val written = listWritten(stage)
-    require(written.keySet == touched,
-      s"VersionedLakeTable($path): wrote partitions ${written.keySet} " +
-        s"but batch touched $touched")
-    JFiles.writeString(stage.resolve("_intent.json"),
-      Serialization.writePretty(CommitIntent(touched.toSeq.sorted,
-        append = Some(true))))
-    onBeforeClaim()
-    val (v, sawInFlight) = claimSlot(stage, curV, touched, ourAppend = true)
-    val entries: Map[String, Seq[String]] = written.map { case (p, fs) =>
-      p -> fs.map(f => s"data/$v/$f").sorted
-    }
-    if (indexed) FileStatsIndex.writeSidecar(
-      spark, path, v, statsCols, recordKeys, keyBloomBits)
-    val now = java.time.Instant.now().toString
-    val ourTouched = Some(touched.toSeq.sorted)
-    val prev = versions.filter(_ < v).lastOption
-    if (v % checkpointEvery == 0 && !sawInFlight && prev.nonEmpty) {
-      // cadence checkpoint THROUGH an append: the full map is the
-      // predecessor's resolve with this commit's files EXTENDING their
-      // partitions (replacing them would drop every superseded-but-
-      // still-needed version file from the resolve)
-      val base = resolved(prev.get)
-      val full = entries.foldLeft(base) { case (a, (p, fs)) =>
-        a.updated(p, a.getOrElse(p, Nil) ++ fs) }
-      commit(CommitManifest(v, now, full, touched = ourTouched,
-        append = Some(true)))
-    } else
-      commit(CommitManifest(v, now, entries, delta = Some(true),
-        touched = ourTouched, append = Some(true)))
+    if (curV.isEmpty) upsertTouched(batch, touched)
+    else commitStaged(stageWrite(merge.prep(batch)), curV, touched,
+      ourAppend = true)
   }
 
   private def upsertTouched(batch: DataFrame, touched: Set[String]): Int = {
@@ -652,7 +621,7 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
     }
     val carried: Map[String, Seq[String]] =
       if (keyBloomBits == 0 || touchedFiles.isEmpty) Map.empty
-      else batchKeyHashes(batch) match {
+      else keyHashes(batch, 10000) match {
         case None => Map.empty // over the probe cap: read everything
         case Some(hs) =>
           val stats = statsFor(touchedFiles.values.flatten.toSeq)
@@ -668,21 +637,41 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
       if (files.isEmpty) incoming // bootstrap, new partitions or all carried
       else merge.latestWins(scan(files), incoming, allowMissingColumns = false)
 
-    // immutable-file contract + optimistic concurrency: stage the new
-    // state (plus the intent marker) under a unique hidden dir, then
-    // claim a version slot by one atomic rename
-    val stage = stageWrite(merged)
+    commitStaged(stageWrite(merged), curV, touched, ourAppend = false,
+      carried)
+  }
+
+  /** The one commit step of [[upsert]] and [[upsertDeferred]] (immutable-
+    * file contract + optimistic concurrency): `stage` holds the new state
+    * of exactly the `touched` partitions; record the intent marker, claim
+    * a version slot above `baseV` by one atomic rename ([[claimSlot]]),
+    * write the stats sidecar, then commit the manifest. A touched
+    * partition's entry is its staged files plus any Bloom-`carried` old
+    * files (disjoint keys by no-false-negatives).
+    *
+    * The manifest is an O(touched) delta — an APPEND delta for
+    * `ourAppend` — except at v0 and every `checkpointEvery`-th version,
+    * which write a full checkpoint so reads stay bounded-replay. A
+    * checkpoint [[replay]]s this commit onto the head resolved AT COMMIT
+    * TIME (interleaved disjoint commits included) and is skipped while any
+    * lower version is still in flight — a checkpoint above an uncommitted
+    * delta would silently shadow it once that delta lands. Its resolved
+    * file lists may still hold appended multi-version files, so it
+    * carries the append flag whenever this commit or its chain appends:
+    * readers above it keep deduping (only a compaction FOLDS versions
+    * away). */
+  private def commitStaged(stage: java.nio.file.Path, baseV: Option[Int],
+      touched: Set[String], ourAppend: Boolean,
+      carried: Map[String, Seq[String]] = Map.empty): Int = {
     val written = listWritten(stage)
     require(written.keySet == touched,
       s"VersionedLakeTable($path): wrote partitions ${written.keySet} " +
         s"but batch touched $touched")
+    val appendFlag = if (ourAppend) Some(true) else None
     JFiles.writeString(stage.resolve("_intent.json"),
-      Serialization.writePretty(CommitIntent(touched.toSeq.sorted)))
+      Serialization.writePretty(CommitIntent(touched.toSeq.sorted, appendFlag)))
     onBeforeClaim()
-    val (v, sawInFlight) = claimSlot(stage, curV, touched)
-
-    // a touched partition's new entry = its rewritten files plus any
-    // Bloom-carried old files (disjoint keys by no-false-negatives)
+    val (v, sawInFlight) = claimSlot(stage, baseV, touched, ourAppend)
     val entries: Map[String, Seq[String]] = written.map { case (p, fs) =>
       p -> (fs.map(f => s"data/$v/$f") ++ carried.getOrElse(p, Nil)).sorted
     }
@@ -690,27 +679,16 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
     // has its index; an orphan sidecar is overwritten on retry
     if (indexed) FileStatsIndex.writeSidecar(
       spark, path, v, statsCols, recordKeys, keyBloomBits)
-    // O(touched) delta commit; full checkpoint at v0 and every
-    // checkpointEvery-th version so reads stay bounded-replay. A full
-    // checkpoint resolves the head AT COMMIT TIME (interleaved disjoint
-    // commits included) and is skipped while any lower version is still
-    // in flight — a checkpoint above an uncommitted delta would silently
-    // shadow it once that delta lands.
-    val now = java.time.Instant.now().toString
-    val ourTouched = Some(touched.toSeq.sorted)
-    val prev = versions.filter(_ < v).lastOption
-    if (prev.isEmpty)
-      commit(CommitManifest(v, now, entries, touched = ourTouched))
-    else if (v % checkpointEvery == 0 && !sawInFlight)
-      // a checkpoint's resolved file lists may still hold appended
-      // multi-version files — carry the append flag so readers above it
-      // keep deduping (only a compaction FOLDS versions away)
-      commit(CommitManifest(v, now, resolved(prev.get) ++ entries,
-        touched = ourTouched,
-        append = if (chainHasAppends(prev.get)) Some(true) else None))
-    else
-      commit(CommitManifest(v, now, entries, delta = Some(true),
-        touched = ourTouched))
+    val m = CommitManifest(v, java.time.Instant.now().toString, entries,
+      delta = Some(true), touched = Some(touched.toSeq.sorted),
+      append = appendFlag)
+    versions.filter(_ < v).lastOption match {
+      case None => commit(m.copy(delta = None))
+      case Some(prev) if v % checkpointEvery == 0 && !sawInFlight =>
+        commit(m.copy(partitions = replay(resolved(prev), m), delta = None,
+          append = if (ourAppend || chainHasAppends(prev)) Some(true) else None))
+      case _ => commit(m)
+    }
   }
 
   /** Test seam: invoked after the batch is fully staged, immediately
@@ -863,14 +841,14 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
     orphans.size
   }
 
-  /** Distinct seed-42 xxhash64 key hashes of the batch, or None past the
-    * probe cap (then every touched file merges — correct, just unpruned).
-    * The batch is already persisted by [[upsert]], so this is one cheap
-    * distinct over cached rows; the cap bounds BOTH the driver collect and
-    * the O(files × keys) Bloom probing. */
-  private def batchKeyHashes(incoming: DataFrame,
-      cap: Int = 10000): Option[Array[Long]] = {
-    val hs = incoming.select(
+  /** Distinct seed-42 xxhash64 record-key hashes of `frame` (the Bloom
+    * probe of the merge and of [[readForJoin]]), or None past `cap` — then
+    * the caller reads unpruned: correct, just every file. The cap bounds
+    * BOTH the driver collect and the O(files × keys) Bloom probing; the
+    * merge's batch is already persisted by [[upsert]], so its probe is one
+    * cheap distinct over cached rows. */
+  private def keyHashes(frame: DataFrame, cap: Int): Option[Array[Long]] = {
+    val hs = frame.select(
       xxhash64(concat_ws("\u0000",
         recordKeys.map(c => col(c).cast("string")): _*)).as("__h"))
       .distinct().limit(cap + 1).collect().map(_.getLong(0))
@@ -1013,19 +991,12 @@ final class VersionedLakeTable(spark: SparkSession, val spec: LakeTableSpec,
     // resolve every kept snapshot with ONE forward replay over the log
     // (delta manifests only list touched partitions — the carried-forward
     // files of untouched partitions are just as live)
+    // ([[replay]]: append deltas EXTEND their partitions, so superseded-
+    // but-referenced version files stay live)
     var running = Map.empty[String, Seq[String]]
     val liveB = scala.collection.mutable.Set.empty[String]
     versions.foreach { v =>
-      val m = manifest(v)
-      running =
-        if (m.isAppend && m.isDelta)
-          // append deltas EXTEND their partitions (resolved()'s fold
-          // rule) — replacing here would mark superseded-but-referenced
-          // version files dead and delete them out from under readers
-          m.partitions.foldLeft(running) { case (a, (p, fs)) =>
-            a.updated(p, a.getOrElse(p, Nil) ++ fs) }
-        else if (m.isDelta) running ++ m.partitions
-        else m.partitions
+      running = replay(running, manifest(v))
       if (v >= keepFrom) liveB ++= running.values.flatten
     }
     val live: Set[String] = liveB.toSet

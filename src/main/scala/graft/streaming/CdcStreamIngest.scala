@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -87,21 +87,42 @@ object CdcStreamIngest {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(sourceDir)
 
-  /** Drain the stream into a keyed lake table via per-micro-batch upsert.
-    * `Trigger.AvailableNow` processes the current backlog in bounded
-    * micro-batches and stops — deterministic for tests/harness; a live
-    * deployment would pass a processing-time trigger. */
-  def toLakeTable(stream: DataFrame, table: KeyedLakeTable,
-      checkpointDir: String): Unit = {
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) table.upsert(batch)
+  /** The one drain of every foreachBatch lake writer: `write` runs on
+    * each NON-EMPTY micro-batch with its batch id and the stream's
+    * lineage token ([[lineageToken]]). `Trigger.AvailableNow` processes
+    * the current backlog in bounded micro-batches and stops —
+    * deterministic for tests/harness; a live deployment would pass a
+    * processing-time trigger. The lineage is resolved once, by the first
+    * batch that asks for it (the checkpoint metadata exists from query
+    * start), so a writer that never uses it never reads it. */
+  private def drain(stream: DataFrame, checkpointDir: String)(
+      write: (DataFrame, Long, () => String) => Unit): Unit = {
+    var lineage: String = null
+    stream.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) write(batch, batchId, () => {
+          if (lineage == null)
+            lineage = lineageToken(batch.sparkSession, checkpointDir)
+          lineage
+        })
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
-    query.awaitTermination()
+      .awaitTermination()
   }
+
+  /** `cols` of `df` plus the constant `create_at`/`update_at` lake
+    * columns of the rows a streaming head writes with no event time of
+    * their own (registry and rank rows) — all in one partition. */
+  private def withLakeTimestamps(df: DataFrame, cols: Column*): DataFrame =
+    df.select(cols ++ Seq("create_at", "update_at")
+      .map(lit("2000-01-01T00:00:00.000000+0000").as(_)): _*)
+
+  /** Drain the stream into a keyed lake table via per-micro-batch upsert. */
+  def toLakeTable(stream: DataFrame, table: KeyedLakeTable,
+      checkpointDir: String): Unit =
+    drain(stream, checkpointDir)((batch, _, _) => table.upsert(batch))
 
   /** §2.8 event-time windowing with a watermark: tumbling-window counts per
     * event type. Append mode emits a window only once its end passes the
@@ -131,31 +152,23 @@ object CdcStreamIngest {
     require(compactEvery == 0 || deferred,
       "compactEvery is the merge-on-read maintenance cadence — it needs " +
         "deferred = true (eager merges have nothing to fold)")
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // `deferred` commits each micro-batch as an APPEND manifest
-        // (VersionedLakeTable.upsertDeferred) — the classic streaming
-        // merge-on-read shape: frequent cheap commits, reads dedup — and
-        // `compactEvery` bounds the read amplification by folding the
-        // accumulated versions every N appended batches (a fresh FULL
-        // commit; safe here because the stream is the only writer). The
-        // cadence reads the table's DURABLE append-chain length, not a
-        // local counter: a restart from checkpoint resumes mid-chain
-        // instead of resetting to zero and letting repeated restarts grow
-        // the chain unboundedly past the knob.
-        if (!batch.isEmpty) {
-          if (deferred) {
-            table.upsertDeferred(batch)
-            if (compactEvery > 0 && table.appendChainLength() >= compactEvery)
-              table.compactSnapshot()
-          } else table.upsert(batch)
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    drain(stream, checkpointDir) { (batch, _, _) =>
+      // `deferred` commits each micro-batch as an APPEND manifest
+      // (VersionedLakeTable.upsertDeferred) — the classic streaming
+      // merge-on-read shape: frequent cheap commits, reads dedup — and
+      // `compactEvery` bounds the read amplification by folding the
+      // accumulated versions every N appended batches (a fresh FULL
+      // commit; safe here because the stream is the only writer). The
+      // cadence reads the table's DURABLE append-chain length, not a
+      // local counter: a restart from checkpoint resumes mid-chain
+      // instead of resetting to zero and letting repeated restarts grow
+      // the chain unboundedly past the knob.
+      if (deferred) {
+        table.upsertDeferred(batch)
+        if (compactEvery > 0 && table.appendChainLength() >= compactEvery)
+          table.compactSnapshot()
+      } else table.upsert(batch)
+    }
   }
 
   /** Drain the stream into a MAINTAINED JOIN VIEW: each micro-batch
@@ -172,19 +185,11 @@ object CdcStreamIngest {
       view: graft.ops.JoinView, dimKey: String,
       dimSnap: () => DataFrame,
       dimDelta: () => DataFrame,
-      checkpointDir: String): Unit = {
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val changes = fact.upsertChanges(batch)
-          view.applyCycle(changes, dimDelta(), dimSnap(), dimKey)
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      checkpointDir: String): Unit =
+    drain(stream, checkpointDir) { (batch, _, _) =>
+      val changes = fact.upsertChanges(batch)
+      view.applyCycle(changes, dimDelta(), dimSnap(), dimKey)
+    }
 
   /** §2.8 ingestion dedup: at-least-once upstream delivery (stream-consumer
     * retries re-deliver records — the reference's Lambda consumer is
@@ -250,38 +255,27 @@ object CdcStreamIngest {
       kept: KeyedLakeTable, registry: graft.sink.VersionedLakeTable,
       checkpointDir: String): Unit = {
     import graft.sim.Similarity
-    val query = stream.writeStream
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        if (!batch0.isEmpty) {
-          // the batch feeds three consumers (sweep, kept anti-join,
-          // registry append) and the source may be non-deterministic:
-          // pin it once
-          val batch = batch0.localCheckpoint(true)
-          val regStored = registry.latestVersion
-            .map(_ => registry.read())
-          val emptyReg = batch
-            .select(col(clusterCol), lit(0.0).as("nrm"), col(embCol))
-            .limit(0)
-          val reg = regStored
-            .map(_.join(batch.select(col(idCol)), Seq(idCol), "left_anti")
-              .select(col(clusterCol), col("nrm"), col(embCol)))
-            .getOrElse(emptyReg)
-          val step = Similarity.semanticDedupIncremental(batch, idCol,
-            embCol, clusterCol, centroids(), reg, tau)
-          kept.upsert(step.kept)
-          registry.upsertDeferred(batch
-            .filter(col(clusterCol).isNotNull)
-            .select(col(idCol), col(clusterCol),
-              Similarity.l2Norm(col(embCol)).as("nrm"), col(embCol),
-              lit("2000-01-01T00:00:00.000000+0000").as("create_at"),
-              lit("2000-01-01T00:00:00.000000+0000").as("update_at")))
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    drain(stream, checkpointDir) { (batch0, _, _) =>
+      // the batch feeds three consumers (sweep, kept anti-join,
+      // registry append) and the source may be non-deterministic:
+      // pin it once
+      val batch = batch0.localCheckpoint(true)
+      val regStored = registry.latestVersion
+        .map(_ => registry.read())
+      val emptyReg = batch
+        .select(col(clusterCol), lit(0.0).as("nrm"), col(embCol))
+        .limit(0)
+      val reg = regStored
+        .map(_.join(batch.select(col(idCol)), Seq(idCol), "left_anti")
+          .select(col(clusterCol), col("nrm"), col(embCol)))
+        .getOrElse(emptyReg)
+      val step = Similarity.semanticDedupIncremental(batch, idCol,
+        embCol, clusterCol, centroids(), reg, tau)
+      kept.upsert(step.kept)
+      registry.upsertDeferred(withLakeTimestamps(
+        batch.filter(col(clusterCol).isNotNull), col(idCol), col(clusterCol),
+        Similarity.l2Norm(col(embCol)).as("nrm"), col(embCol)))
+    }
   }
 
   /** Streaming span (C4) dedup — [[graft.dedup.SpanDedup.incremental]]
@@ -323,41 +317,26 @@ object CdcStreamIngest {
   def toSpanDedupTable(stream: DataFrame, idCol: String, textCol: String,
       k: Int, cleaned: KeyedLakeTable,
       registry: graft.sink.VersionedLakeTable,
-      checkpointDir: String): Unit = {
-    // resolved at first batch (the checkpoint metadata exists from start)
-    var lineage: String = null
-    val query = stream.writeStream
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty) {
-          if (lineage == null)
-            lineage = lineageToken(batch0.sparkSession, checkpointDir)
-          // the batch feeds the span pass, the cleaned upsert, and the
-          // lake-column join; the source may be non-deterministic — pin it
-          val batch = batch0.localCheckpoint(true)
-          val reg = registry.latestVersion
-            .map(_ => priorRows(registry.read(), lineage, batchId)
-              .select(col("h")))
-            .getOrElse(batch.select(lit(Array.empty[Byte]).as("h")).limit(0))
-          val step = graft.dedup.SpanDedup.incremental(
-            batch.select(col(idCol), col(textCol)), idCol, textCol, reg, k)
-          // re-attach the stream's lake columns (create_at/update_at) to
-          // the cleaned projection by id for the keyed upsert
-          cleaned.upsert(step.cleaned.join(
-            batch.select(col(idCol), col("create_at"), col("update_at")),
-            Seq(idCol)))
-          registry.upsertDeferred(step.newSpans
-            .select(col("h"), lit(lineage).as("lineage"),
-              lit(batchId).as("batch_id"),
-              lit("2000-01-01T00:00:00.000000+0000").as("create_at"),
-              lit("2000-01-01T00:00:00.000000+0000").as("update_at")))
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      checkpointDir: String): Unit =
+    drain(stream, checkpointDir) { (batch0, batchId, lineageOf) =>
+      val lineage = lineageOf()
+      // the batch feeds the span pass, the cleaned upsert, and the
+      // lake-column join; the source may be non-deterministic — pin it
+      val batch = batch0.localCheckpoint(true)
+      val reg = registry.latestVersion
+        .map(_ => priorRows(registry.read(), lineage, batchId)
+          .select(col("h")))
+        .getOrElse(batch.select(lit(Array.empty[Byte]).as("h")).limit(0))
+      val step = graft.dedup.SpanDedup.incremental(
+        batch.select(col(idCol), col(textCol)), idCol, textCol, reg, k)
+      // re-attach the stream's lake columns (create_at/update_at) to
+      // the cleaned projection by id for the keyed upsert
+      cleaned.upsert(step.cleaned.join(
+        batch.select(col(idCol), col("create_at"), col("update_at")),
+        Seq(idCol)))
+      registry.upsertDeferred(withLakeTimestamps(step.newSpans, col("h"),
+        lit(lineage).as("lineage"), lit(batchId).as("batch_id")))
+    }
 
   /** Streaming MinHash-LSH near-dup dedup — the third member of the
     * streaming dedup trio (span/C4: [[toSpanDedupTable]]; semantic:
@@ -400,49 +379,34 @@ object CdcStreamIngest {
   def toNearDupTable(stream: DataFrame, idCol: String, textCol: String,
       n: Int, bands: Int, rowsPerBand: Int, threshold: Double,
       cleaned: KeyedLakeTable, registry: graft.sink.VersionedLakeTable,
-      checkpointDir: String, maxBucket: Int = 10000): Unit = {
-    // resolved at first batch (the checkpoint metadata exists from start)
-    var lineage: String = null
-    val query = stream.writeStream
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty) {
-          if (lineage == null)
-            lineage = lineageToken(batch0.sparkSession, checkpointDir)
-          // the batch feeds the LSH pass, the cleaned upsert, and the
-          // registry append; the source may be non-deterministic — pin it
-          val batch = batch0.localCheckpoint(true)
-          val reg = registry.latestVersion
-            .map(_ => priorRows(registry.read(), lineage, batchId)
-              .select(col(idCol), col(textCol), col("sig")))
-            .getOrElse(batch
-              .select(col(idCol), col(textCol),
-                lit(null).cast("array<bigint>").as("sig"))
-              .limit(0))
-          val step = graft.dedup.Dedup.incrementalDedupSigs(reg,
-            batch.select(col(idCol), col(textCol)), idCol, textCol,
-            n, bands, rowsPerBand, threshold, maxBucket,
-            // footer-metadata size hint drives the adaptive candidate
-            // semi-filter (upper bound over the MoR chain — fine for a
-            // regime decision)
-            registrySizeHint = registry.approxRowCount())
-          // re-attach the stream's lake columns to the survivors by id
-          cleaned.upsert(step.kept.join(
-            batch.select(col(idCol), col("create_at"), col("update_at")),
-            Seq(idCol)))
-          registry.upsertDeferred(step.registryRows
-            .select(col(idCol), col(textCol), col("sig"),
-              lit(lineage).as("lineage"),
-              lit(batchId).as("batch_id"),
-              lit("2000-01-01T00:00:00.000000+0000").as("create_at"),
-              lit("2000-01-01T00:00:00.000000+0000").as("update_at")))
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      checkpointDir: String, maxBucket: Int = 10000): Unit =
+    drain(stream, checkpointDir) { (batch0, batchId, lineageOf) =>
+      val lineage = lineageOf()
+      // the batch feeds the LSH pass, the cleaned upsert, and the
+      // registry append; the source may be non-deterministic — pin it
+      val batch = batch0.localCheckpoint(true)
+      val reg = registry.latestVersion
+        .map(_ => priorRows(registry.read(), lineage, batchId)
+          .select(col(idCol), col(textCol), col("sig")))
+        .getOrElse(batch
+          .select(col(idCol), col(textCol),
+            lit(null).cast("array<bigint>").as("sig"))
+          .limit(0))
+      val step = graft.dedup.Dedup.incrementalDedupSigs(reg,
+        batch.select(col(idCol), col(textCol)), idCol, textCol,
+        n, bands, rowsPerBand, threshold, maxBucket,
+        // footer-metadata size hint drives the adaptive candidate
+        // semi-filter (upper bound over the MoR chain — fine for a
+        // regime decision)
+        registrySizeHint = registry.approxRowCount())
+      // re-attach the stream's lake columns to the survivors by id
+      cleaned.upsert(step.kept.join(
+        batch.select(col(idCol), col("create_at"), col("update_at")),
+        Seq(idCol)))
+      registry.upsertDeferred(withLakeTimestamps(step.registryRows,
+        col(idCol), col(textCol), col("sig"),
+        lit(lineage).as("lineage"), lit(batchId).as("batch_id")))
+    }
 
   /** Streaming corpus-global line dedup —
     * [[graft.text.LineClean.dropRepeatedLines]] (RefinedWeb boilerplate
@@ -510,72 +474,62 @@ object CdcStreamIngest {
     require(registry.spec.recordKeys == Seq(idCol, "pos"),
       s"toLineDedupTable: registry must be keyed ($idCol, pos), got " +
         registry.spec.recordKeys.mkString("(", ", ", ")"))
-    var lineage: String = null
-    val query = stream.writeStream
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty) {
-          if (lineage == null)
-            lineage = lineageToken(batch0.sparkSession, checkpointDir)
-          val batch = batch0.localCheckpoint(true)
-          val lineCols = Seq(idCol, "pos", "line", "h",
-            "create_at", "update_at").map(col)
-          val batchLines = batch
-            .select(col(idCol), col("create_at"), col("update_at"),
-              posexplode(graft.text.LineClean.lines(col(textCol), delim))
-                .as(Seq("pos", "line")))
-            .withColumn("h", md5(col("line")))
-            .select(lineCols: _*)
-            // feeds the count, the affected set, the reassembly, and the
-            // registry append — pin once
-            .localCheckpoint(true)
-          val prior = registry.latestVersion
-            .map(_ => priorRows(registry.read(), lineage, batchId)
-              .select(lineCols: _*))
-            .getOrElse(batchLines.limit(0))
-          val all = prior.unionByName(batchLines)
-          // hotness can only CHANGE for lines present in this batch
-          val hotBatch = all
-            .join(batchLines.select(col("h")).distinct(), Seq("h"),
-              "left_semi")
-            .groupBy(col("h")).agg(countDistinct(col(idCol)).as("__d"))
-            .where(col("__d") >= maxDocs).select(col("h"))
-          val affected = prior.join(hotBatch, Seq("h"), "left_semi")
-            .select(col(idCol))
-            .union(batch.select(col(idCol)))
-            .distinct()
-          val affLines = all.join(affected, Seq(idCol), "left_semi")
-            .localCheckpoint(true)
-          // the FULL hot set restricted to the affected docs' lines: a
-          // re-cleaned doc drops its already-hot lines too
-          val hotAff = all
-            .join(affLines.select(col("h")).distinct(), Seq("h"),
-              "left_semi")
-            .groupBy(col("h")).agg(countDistinct(col(idCol)).as("__d"))
-            .where(col("__d") >= maxDocs).select(col("h"))
-          val rebuiltText = affLines.join(hotAff, Seq("h"), "left_anti")
-            .groupBy(col(idCol))
-            .agg(array_join(
-              transform(
-                array_sort(collect_list(struct(col("pos"), col("line")))),
-                p => p.getField("line")),
-              delim).as(textCol))
-          val docMeta = affLines.groupBy(col(idCol))
-            .agg(max(col("create_at")).as("create_at"),
-              max(col("update_at")).as("update_at"))
-          cleaned.upsert(docMeta
-            .join(rebuiltText, Seq(idCol), "left")
-            .withColumn(goneCol, col(textCol).isNull)
-            .withColumn(textCol, coalesce(col(textCol), lit(""))))
-          registry.upsertDeferred(batchLines
-            .withColumn("lineage", lit(lineage))
-            .withColumn("batch_id", lit(batchId)))
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    drain(stream, checkpointDir) { (batch0, batchId, lineageOf) =>
+      val lineage = lineageOf()
+      val batch = batch0.localCheckpoint(true)
+      val lineCols = Seq(idCol, "pos", "line", "h",
+        "create_at", "update_at").map(col)
+      val batchLines = batch
+        .select(col(idCol), col("create_at"), col("update_at"),
+          posexplode(graft.text.LineClean.lines(col(textCol), delim))
+            .as(Seq("pos", "line")))
+        .withColumn("h", md5(col("line")))
+        .select(lineCols: _*)
+        // feeds the count, the affected set, the reassembly, and the
+        // registry append — pin once
+        .localCheckpoint(true)
+      val prior = registry.latestVersion
+        .map(_ => priorRows(registry.read(), lineage, batchId)
+          .select(lineCols: _*))
+        .getOrElse(batchLines.limit(0))
+      val all = prior.unionByName(batchLines)
+      // hotness can only CHANGE for lines present in this batch
+      val hotBatch = all
+        .join(batchLines.select(col("h")).distinct(), Seq("h"),
+          "left_semi")
+        .groupBy(col("h")).agg(countDistinct(col(idCol)).as("__d"))
+        .where(col("__d") >= maxDocs).select(col("h"))
+      val affected = prior.join(hotBatch, Seq("h"), "left_semi")
+        .select(col(idCol))
+        .union(batch.select(col(idCol)))
+        .distinct()
+      val affLines = all.join(affected, Seq(idCol), "left_semi")
+        .localCheckpoint(true)
+      // the FULL hot set restricted to the affected docs' lines: a
+      // re-cleaned doc drops its already-hot lines too
+      val hotAff = all
+        .join(affLines.select(col("h")).distinct(), Seq("h"),
+          "left_semi")
+        .groupBy(col("h")).agg(countDistinct(col(idCol)).as("__d"))
+        .where(col("__d") >= maxDocs).select(col("h"))
+      val rebuiltText = affLines.join(hotAff, Seq("h"), "left_anti")
+        .groupBy(col(idCol))
+        .agg(array_join(
+          transform(
+            array_sort(collect_list(struct(col("pos"), col("line")))),
+            p => p.getField("line")),
+          delim).as(textCol))
+      val docMeta = affLines.groupBy(col(idCol))
+        .agg(max(col("create_at")).as("create_at"),
+          max(col("update_at")).as("update_at"))
+      cleaned.upsert(docMeta
+        .join(rebuiltText, Seq(idCol), "left")
+        .withColumn(goneCol, col(textCol).isNull)
+        .withColumn(textCol, coalesce(col(textCol), lit(""))))
+      registry.upsertDeferred(batchLines
+        .withColumn("lineage", lit(lineage))
+        .withColumn("batch_id", lit(batchId)))
+    }
   }
 
   /** Streaming graph maintenance (q169): micro-batches of EDGES upsert
@@ -611,25 +565,13 @@ object CdcStreamIngest {
     require(ranks.spec.recordKeys == Seq("node"),
       "toPagerankTable: ranks table must be keyed (node), got " +
         ranks.spec.recordKeys.mkString("(", ", ", ")"))
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          edges.upsert(batch)
-          val ranked = graft.graph.PageRank.run(
-            edges.read().select(col("src"), col("dst")), iters = iters)
-          ranks.upsert(ranked
-            .withColumn("create_at",
-              lit("2000-01-01T00:00:00.000000+0000"))
-            .withColumn("update_at",
-              lit("2000-01-01T00:00:00.000000+0000")))
-          ranked.unpersist()
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    drain(stream, checkpointDir) { (batch, _, _) =>
+      edges.upsert(batch)
+      val ranked = graft.graph.PageRank.run(
+        edges.read().select(col("src"), col("dst")), iters = iters)
+      ranks.upsert(withLakeTimestamps(ranked, col("*")))
+      ranked.unpersist()
+    }
   }
 
   /** The WARM-START variant of [[toPagerankTable]] (q170): after each
@@ -666,45 +608,31 @@ object CdcStreamIngest {
     require(ranks.spec.recordKeys == Seq("node", "batch_id"),
       "toPagerankWarmTable: ranks table must be keyed (node, batch_id), got " +
         ranks.spec.recordKeys.mkString("(", ", ", ")"))
-    var lineage: String = null
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          if (lineage == null)
-            lineage = lineageToken(batch.sparkSession, checkpointDir)
-          edges.upsert(batch)
-          val prior = ranks.latestVersion
-            .map { _ =>
-              // latest rank per node among PRIOR batches only — a
-              // replayed batch must not warm-start from its own
-              // crashed append
-              priorRows(ranks.read(), lineage, batchId)
-                .groupBy(col("node"))
-                .agg(max(struct(col("batch_id"), col("rank"))).as("m"))
-                .select(col("node"), col("m.rank").as("rank"))
-            }
-            .getOrElse {
-              val s = batch.sparkSession
-              import s.implicits._
-              Seq.empty[(String, Long)].toDF("node", "rank")
-            }
-          val ranked = graft.graph.PageRank.resume(
-            edges.read().select(col("src"), col("dst")), prior,
-            iters = itersPerBatch)
-          ranks.upsertDeferred(ranked
-            .select(col("node"), col("rank"),
-              lit(lineage).as("lineage"),
-              lit(batchId).as("batch_id"),
-              lit("2000-01-01T00:00:00.000000+0000").as("create_at"),
-              lit("2000-01-01T00:00:00.000000+0000").as("update_at")))
-          ranked.unpersist()
-          ()
+    drain(stream, checkpointDir) { (batch, batchId, lineageOf) =>
+      val lineage = lineageOf()
+      edges.upsert(batch)
+      val prior = ranks.latestVersion
+        .map { _ =>
+          // latest rank per node among PRIOR batches only — a
+          // replayed batch must not warm-start from its own
+          // crashed append
+          priorRows(ranks.read(), lineage, batchId)
+            .groupBy(col("node"))
+            .agg(max(struct(col("batch_id"), col("rank"))).as("m"))
+            .select(col("node"), col("m.rank").as("rank"))
         }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+        .getOrElse {
+          val s = batch.sparkSession
+          import s.implicits._
+          Seq.empty[(String, Long)].toDF("node", "rank")
+        }
+      val ranked = graft.graph.PageRank.resume(
+        edges.read().select(col("src"), col("dst")), prior,
+        iters = itersPerBatch)
+      ranks.upsertDeferred(withLakeTimestamps(ranked, col("node"),
+        col("rank"), lit(lineage).as("lineage"), lit(batchId).as("batch_id")))
+      ranked.unpersist()
+    }
   }
 
   /** The COMPOSED streaming curation pipeline: span (C4) dedup feeding
@@ -735,64 +663,46 @@ object CdcStreamIngest {
       k: Int, n: Int, bands: Int, rowsPerBand: Int, threshold: Double,
       curated: KeyedLakeTable, spanRegistry: graft.sink.VersionedLakeTable,
       docRegistry: graft.sink.VersionedLakeTable,
-      checkpointDir: String, maxBucket: Int = 10000): Unit = {
-    // resolved at first batch (the checkpoint metadata exists from start)
-    var lineage: String = null
-    val query = stream.writeStream
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty) {
-          if (lineage == null)
-            lineage = lineageToken(batch0.sparkSession, checkpointDir)
-          val batch = batch0.localCheckpoint(true)
-          // stage 1: span dedup against the span registry
-          val spanReg = spanRegistry.latestVersion
-            .map(_ => priorRows(spanRegistry.read(), lineage, batchId)
-              .select(col("h")))
-            .getOrElse(batch.select(lit(Array.empty[Byte]).as("h")).limit(0))
-          val spanStep = graft.dedup.SpanDedup.incremental(
-            batch.select(col(idCol), col(textCol)), idCol, textCol,
-            spanReg, k)
-          // the cleaned frame feeds stage 2, the survivors join, and the
-          // doc-registry append — pin it (its lineage crosses two lake
-          // reads and a span aggregation)
-          val cleaned = spanStep.cleaned.localCheckpoint(true)
-          // stage 2: near-dup dedup of the CLEANED text via the
-          // signature registry
-          val docReg = docRegistry.latestVersion
-            .map(_ => priorRows(docRegistry.read(), lineage, batchId)
-              .select(col(idCol), col(textCol), col("sig")))
-            .getOrElse(cleaned
-              .select(col(idCol), col("clean_text").as(textCol),
-                lit(null).cast("array<bigint>").as("sig"))
-              .limit(0))
-          val sigStep = graft.dedup.Dedup.incrementalDedupSigs(docReg,
-            cleaned.select(col(idCol), col("clean_text").as(textCol)),
-            idCol, textCol, n, bands, rowsPerBand, threshold, maxBucket,
-            registrySizeHint = docRegistry.approxRowCount())
-          // survivors keep their span metrics + the stream's lake columns
-          curated.upsert(sigStep.kept.select(col(idCol))
-            .join(cleaned, Seq(idCol))
-            .join(batch.select(col(idCol), col("create_at"),
-              col("update_at")), Seq(idCol)))
-          spanRegistry.upsertDeferred(spanStep.newSpans
-            .select(col("h"), lit(lineage).as("lineage"),
-              lit(batchId).as("batch_id"),
-              lit("2000-01-01T00:00:00.000000+0000").as("create_at"),
-              lit("2000-01-01T00:00:00.000000+0000").as("update_at")))
-          docRegistry.upsertDeferred(sigStep.registryRows
-            .select(col(idCol), col(textCol), col("sig"),
-              lit(lineage).as("lineage"),
-              lit(batchId).as("batch_id"),
-              lit("2000-01-01T00:00:00.000000+0000").as("create_at"),
-              lit("2000-01-01T00:00:00.000000+0000").as("update_at")))
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      checkpointDir: String, maxBucket: Int = 10000): Unit =
+    drain(stream, checkpointDir) { (batch0, batchId, lineageOf) =>
+      val lineage = lineageOf()
+      val batch = batch0.localCheckpoint(true)
+      // stage 1: span dedup against the span registry
+      val spanReg = spanRegistry.latestVersion
+        .map(_ => priorRows(spanRegistry.read(), lineage, batchId)
+          .select(col("h")))
+        .getOrElse(batch.select(lit(Array.empty[Byte]).as("h")).limit(0))
+      val spanStep = graft.dedup.SpanDedup.incremental(
+        batch.select(col(idCol), col(textCol)), idCol, textCol,
+        spanReg, k)
+      // the cleaned frame feeds stage 2, the survivors join, and the
+      // doc-registry append — pin it (its lineage crosses two lake
+      // reads and a span aggregation)
+      val cleaned = spanStep.cleaned.localCheckpoint(true)
+      // stage 2: near-dup dedup of the CLEANED text via the
+      // signature registry
+      val docReg = docRegistry.latestVersion
+        .map(_ => priorRows(docRegistry.read(), lineage, batchId)
+          .select(col(idCol), col(textCol), col("sig")))
+        .getOrElse(cleaned
+          .select(col(idCol), col("clean_text").as(textCol),
+            lit(null).cast("array<bigint>").as("sig"))
+          .limit(0))
+      val sigStep = graft.dedup.Dedup.incrementalDedupSigs(docReg,
+        cleaned.select(col(idCol), col("clean_text").as(textCol)),
+        idCol, textCol, n, bands, rowsPerBand, threshold, maxBucket,
+        registrySizeHint = docRegistry.approxRowCount())
+      // survivors keep their span metrics + the stream's lake columns
+      curated.upsert(sigStep.kept.select(col(idCol))
+        .join(cleaned, Seq(idCol))
+        .join(batch.select(col(idCol), col("create_at"),
+          col("update_at")), Seq(idCol)))
+      spanRegistry.upsertDeferred(withLakeTimestamps(spanStep.newSpans,
+        col("h"), lit(lineage).as("lineage"), lit(batchId).as("batch_id")))
+      docRegistry.upsertDeferred(withLakeTimestamps(sigStep.registryRows,
+        col(idCol), col(textCol), col("sig"),
+        lit(lineage).as("lineage"), lit(batchId).as("batch_id")))
+    }
 
   /** A keyed CDC record for the stateful streaming variant. */
   final case class KeyedEvent(id: String, update_at: String, payload: String)

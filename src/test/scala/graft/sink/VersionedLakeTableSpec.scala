@@ -488,4 +488,31 @@ class VersionedLakeTableSpec extends AnyFunSuite with SparkSpec {
     assert(report.jobs <= 9, report.render("versioned upsert"))
     assert(state(table.read()).map(_.note) === Set("a2", "b2", "c"))
   }
+
+  test("countRows on a table that turned stats on partway: exact while " +
+    "unindexed files remain, zero jobs once every file is indexed") {
+    val spec = LakeTableSpec(path = tmpDir("vcount-late-stats"),
+      recordKeys = Seq("id"), precombine = "update_at",
+      partitionSource = "create_at")
+    def txns(minutes: Range, update: String) =
+      for { m <- minutes; i <- 0 until 5 } yield {
+        val t = f"2024-01-01T00:$m%02d:01.000000+0000"
+        Workload.Txn(f"k$m-$i", "a1", t, update, "fuel", m * 10 + i, 0, "v")
+      }
+    new VersionedLakeTable(spark, spec)
+      .upsert(txns(0 until 4, "2024-01-01T01:00:00.000000+0000").toDF())
+    val indexed = new VersionedLakeTable(spark, spec, statsCols = Seq("amount"))
+    // rewrites minutes 2-3 (now indexed), adds 4-5; minutes 0-1 keep their
+    // unindexed v0 files
+    indexed.upsert(txns(2 until 6, "2024-01-01T02:00:00.000000+0000").toDF())
+    val (mixed, mixedReport) = Profile.profile(spark)(indexed.countRows())
+    assert(mixed === 30L && mixed === indexed.read().count())
+    assert(mixedReport.jobs > 0, "unindexed files are counted by a scan")
+    assert(indexed.countRows(Some(0)) === 20L)
+    // the compacted snapshot's files all carry sidecar stats
+    indexed.compactSnapshot()
+    val (full, fullReport) = Profile.profile(spark)(indexed.countRows())
+    assert(full === 30L && full === indexed.read().count())
+    assert(fullReport.jobs === 0, fullReport.render("indexed countRows"))
+  }
 }
