@@ -43,11 +43,6 @@ import java.nio.file.{Files, Paths}
   *    each for numbers that agree within variance).
   *  - WARM READ twins (warmReadEntries): three untimed warmups then
   *    min-of-3 — JIT compile depth, see the inline note.
-  *  - SETTLED entries (ScaleBench.settledNames + the wide2/wide3
-  *    heavy-hitter pairs): answered questions whose numbers are
-  *    recorded in BENCH_COMPARE with their closing round — demoted to
-  *    SPARK_GRAFT_BENCH_FULL=1, not re-measured every round. Unbounded
-  *    per-round entry growth is what killed the r15 artifact.
   *  - `windows`: TWO same-invocation passes of the headline-8, each
   *    carrying BOTH engines' full sample arrays (DuckDB re-timed on the
   *    same relayout via tools/duck_time.py) — r14 proved single-window
@@ -68,7 +63,6 @@ object Bench {
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val fullProfile = sys.env.get("SPARK_GRAFT_BENCH_FULL").contains("1")
     def makeSession(): SparkSession = {
       // engine defaults live in GraftSession (scan-floor batch size,
       // bucketed-scan ordering, shuffle=cores — each with its measured
@@ -283,8 +277,6 @@ object Bench {
     val maintEntries = (graft.bench.MaintenanceBench.entries ++
         graft.bench.ScaleBench.entries)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-      .filter { case (n, _) =>
-        fullProfile || !graft.bench.ScaleBench.settledNames(n) }
     maintEntries.foreach { case (name, mk) =>
       if (entryBudgetLeft <= 0) { skipped += name; flush() }
       else {
@@ -363,39 +355,6 @@ object Bench {
             }
           }
         record(name, ts)
-      }
-    }
-    // Paired A/B entries: the comparison IS the claim, so one invocation
-    // times both sides strictly interleaved (ScaleBench.abSamples3) and
-    // reports each side's min — a host-variance patch cannot land on one
-    // whole side's sequential block the way the per-entry loop allows.
-    // Each pair runs in a FRESH session (the long-entry protocol): these
-    // are the last tens-of-seconds entries in a 100+-entry JVM, and r12's
-    // run of record put one side 2× over the builder's same-protocol
-    // recordings — consistent with late-session heap/GC pressure the
-    // interleaving alone cannot control for. The wide2/wide3 pairs are
-    // SETTLED (r13/r14 OOM table + slope claims recorded in
-    // BENCH_COMPARE) and run only under SPARK_GRAFT_BENCH_FULL=1.
-    val paired = graft.bench.ScaleBench.pairedEntries
-      .filter { case ((a, b), _) =>
-        only.forall(o => o.contains(a) || o.contains(b)) }
-      .filter { case ((a, b), _) =>
-        fullProfile ||
-          (!graft.bench.ScaleBench.settledNames(a) &&
-            !graft.bench.ScaleBench.settledNames(b)) }
-    paired.foreach { case ((na, nb), mk) =>
-      if (entryBudgetLeft <= 0) { skipped += na; skipped += nb; flush() }
-      else {
-        spark.stop()
-        System.gc()
-        spark = makeSession()
-        try {
-          val (ta, tb) = mk(spark, runDir)()
-          record(na, ta); record(nb, tb)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $na/$nb failed: ${e.getMessage}")
-          record(na, Seq.empty); record(nb, Seq.empty)
-        }
       }
     }
     // window 2: a second full Spark pass over the headline set (same

@@ -17,17 +17,14 @@ import graft.text.{HeavyHitters, TextOps}
   * to scratch parquet once per JVM, so every timed thunk pays the same
   * one-scan input cost and the pair isolates exactly the claim under test:
   *
-  *  - `m_hh_mg_x100` vs `m_hh_full_x100`, `m_hh_mg_wide` vs
-  *    `m_hh_full_wide`, and `m_hh_mg_wide2` vs `m_hh_full_wide2`: exact
-  *    heavy hitters — the bounded Misra–Gries
-  *    two-pass vs the full-vocabulary `GROUP BY` — over three fixtures
-  *    spanning three vocabulary decades: the ×100 document stream
-  *    (25M tokens, ~30k distinct), a wide stream (25M tokens, ~20M
+  *  - `m_hh_mg_x100` vs `m_hh_full_x100` and `m_hh_mg_wide` vs
+  *    `m_hh_full_wide`: exact heavy hitters — the bounded Misra–Gries
+  *    two-pass vs the full-vocabulary `GROUP BY` — over two fixtures
+  *    spanning two vocabulary decades: the ×100 document stream
+  *    (25M tokens, ~30k distinct) and a wide stream (25M tokens, ~20M
   *    distinct: 80% unique-tail positions, 20% over 20 hot tokens — web
-  *    text's id/url/typo tail), and a wide2 stream one decade up (250M
-  *    tokens, ~200M distinct, same mix — the decade round 9 left
-  *    extrapolated, added to pin the absolute-seconds crossover).
-  *    All six produce exact answers (HeavyHittersSpec/q131 pin the
+  *    text's id/url/typo tail).
+  *    All four produce exact answers (HeavyHittersSpec/q131 pin the
   *    math), every thunk computes its own total N, and each pair reads the
   *    same materialized layout, so it isolates ONE variable and records
   *    the operator's actual claim as measured curves: at fixed 25M
@@ -35,24 +32,10 @@ import graft.text.{HeavyHitters, TextOps}
   *    ~2.7 s at 20M — flat, k-bounded state and shuffle) while the
   *    groupBy grows with the vocabulary it must carry (~0.5 s → ~2.1 s
   *    across the 670× step, state + shuffle rows ∝ distinct tokens).
-  *    The wide2 pair is recorded INTERLEAVED ([[pairedEntries]]/
-  *    [[abSamples3]]: A,B,A,B,A,B in one invocation, per-side min-of-3) —
-  *    sequential per-side timing let a host-variance patch land on one
-  *    whole side and flipped the recorded winner across rounds. The
-  *    comparison claim at this decade is whatever the current
-  *    BENCH_r*.json interleaved pair itself shows — this doc
-  *    deliberately carries no absolute number for it (three rounds of
-  *    prose/artifact contradiction earned that rule; BENCH_COMPARE.md
-  *    records each round's pair with its spread).
-  *    What the artifacts DO support across the wide→wide2 decade is the
-  *    SLOPES: MG grows with the token count it scans (~7× over the 10×
-  *    step) while the groupBy additionally carries the vocabulary in
-  *    state + shuffle (~10× and climbing — its 200M-entry hash state
-  *    spills past cache). Where the vocabulary is small the groupBy
-  *    rightly wins (MG is two aggregation-grade passes against one —
-  *    use groupBy there); the slopes put the crossover REGION around
-  *    this decade, and at the 100 TB tail (billions distinct) only the
-  *    groupBy line keeps climbing with vocabulary. (Round 8's version of this pair derived
+  *    The two decades above (250M and 750M tokens) were measured as
+  *    interleaved pairs in r13/r14 and are recorded in BENCH_COMPARE.md
+  *    (MG flat across three vocabulary decades, the groupBy OOMs at
+  *    4 GiB). (Round 8's version of this pair derived
   *    tokens lazily and un-symmetrically, measuring tokenizer passes,
   *    not strategy; round 9 also fixed the fixture's file count, which
   *    had capped scan parallelism for every consumer.)
@@ -222,47 +205,6 @@ object ScaleBench {
       .select((-col("doc_id") - 1).as("doc_id"),
         concat(col("text"), lit(" zb")).as("text"))
 
-  /** The accumulated signature registry of the ×`times` corpus —
-    * (doc_id, text, sig) rows as [[graft.dedup.Dedup.incrementalDedupSigs]]
-    * returns them — materialized: the state a continuously-ingesting
-    * near-dup pipeline stores between batches (the signature build is
-    * ingest-paid by design, so it is untimed here). */
-  private def lshRegistry(s: SparkSession, dir: String,
-      times: Int): DataFrame =
-    materialized(s, s"lsh_reg_x$times") {
-      val d = docsTimes(s, dir, times)
-      d.select(col("doc_id"), col("text"))
-        .join(graft.dedup.Dedup.signatureArrays(d, "doc_id", "text",
-            n = 2, numHashes = 128).withColumnRenamed("doc", "doc_id"),
-          Seq("doc_id"), "left")
-    }
-
-  /** One arriving ×1 batch for the near-dup pair: fresh (negative) ids,
-    * raw corpus text — every batch doc near-duplicates each replica's
-    * tail-perturbed copy, the mostly-duplicate arrival the incremental
-    * path exists for. */
-  private def lshBatch(s: SparkSession, dir: String): DataFrame =
-    materialized(s, "lsh_batch") {
-      graft.Tables.load(s, dir, "documents")
-        .select((-col("doc_id") - 1).as("doc_id"), col("text"))
-    }
-
-  /** The ALL-NOVEL arrival twin: same batch size, per-doc-unique tokens
-    * so NO shingle is shared with the corpus or within the batch — zero
-    * candidate pairs by construction. Isolates the per-batch floor the
-    * two forms pay when there is nothing to verify: the text form still
-    * re-shingles the whole corpus (its LSH runs over corpus ∪ batch
-    * regardless of content), the sig form's corpus-sized work is one
-    * scan of stored signature metadata. */
-  private def lshNovelBatch(s: SparkSession, dir: String): DataFrame =
-    materialized(s, "lsh_batch_novel") {
-      graft.Tables.load(s, dir, "documents")
-        .select((-col("doc_id") - 1).as("doc_id"),
-          concat_ws(" ", (0 until 40).map(j =>
-            concat(lit("nv"), col("doc_id").cast("string"), lit(s"x$j"))): _*)
-            .as("text"))
-    }
-
   /** The ×`times` token stream of the documents table, materialized. */
   private def tokensFixture(s: SparkSession, dir: String, times: Int): DataFrame =
     materialized(s, s"toks_x$times") {
@@ -286,43 +228,6 @@ object ScaleBench {
   private def tokensWideFixture(s: SparkSession): DataFrame =
     materialized(s, "toks_wide") {
       s.range(25000000L).select(
-        when(pmod(col("id"), lit(5)) < 4,
-          concat(lit("u"), col("id").cast("string")))
-          .otherwise(concat(lit("hot"), pmod(col("id"), lit(20))
-            .cast("string")))
-          .as("token"))
-    }
-
-  /** One vocabulary decade above [[tokensWideFixture]]: 250M tokens,
-    * ~200M distinct, same 80/20 unique-tail/hot-token mix. Round 9
-    * recorded MG flat across the 30k→20M step while the groupBy grew 4×
-    * but still won in absolute seconds at 20M — leaving the crossover
-    * extrapolated. This decade exists to pin it with data: the groupBy
-    * must now build and shuffle ~200M-entry state while MG's stays
-    * k-bounded and scan-dominated. */
-  private def tokensWide2Fixture(s: SparkSession): DataFrame =
-    materialized(s, "toks_wide2") {
-      s.range(250000000L).select(
-        when(pmod(col("id"), lit(5)) < 4,
-          concat(lit("u"), col("id").cast("string")))
-          .otherwise(concat(lit("hot"), pmod(col("id"), lit(20))
-            .cast("string")))
-          .as("token"))
-    }
-
-  /** The THIRD vocabulary decade: 750M tokens, ~600M distinct, same
-    * 80/20 unique-tail/hot-token mix. The wide→wide2 step left the
-    * crossover claim resting on two points (and r12's run of record
-    * contradicted the builder's interleaved wide2 recordings); this
-    * point is where the full groupBy's ~600M-entry state can no longer
-    * fit the 16 GB JVM's aggregation map and must spill, while MG's
-    * k-bounded passes stay token-scan-bound — the regime separation the
-    * operator exists for, measured instead of extrapolated. (A ~2B-
-    * distinct point — the 100 TB tail's shape — stays impractical
-    * locally; three decades of slope are the honest local evidence.) */
-  private def tokensWide3Fixture(s: SparkSession): DataFrame =
-    materialized(s, "toks_wide3") {
-      s.range(750000000L).select(
         when(pmod(col("id"), lit(5)) < 4,
           concat(lit("u"), col("id").cast("string")))
           .otherwise(concat(lit("hot"), pmod(col("id"), lit(20))
@@ -545,78 +450,6 @@ object ScaleBench {
       () => noop(graft.dedup.SpanDedup
         .clean(corpus.select(col("doc_id"), col("text")).unionByName(batch),
           "doc_id", "text", k = 3))
-    }),
-    // -------- incremental near-dup (MinHash-LSH): signature registry vs
-    // corpus re-shingle, two corpus decades (pinned equal by
-    // SigRegistrySpec; q155 oracles the sig form). The SAME ×1 arriving
-    // batch dedups against the ×1 and ×10 corpus; the sig form consults
-    // the registry's STORED minhash arrays (built untimed — ingest-paid,
-    // amortized over every later batch) so its per-batch cost is batch
-    // shingling + a metadata-narrow banded bucket join whose slope is
-    // 16 bytes × bands per corpus doc; the text form re-runs LSH over
-    // corpus ∪ batch, re-shingling every stored byte per batch. The pair
-    // of slopes is the claim: both grow with the corpus, but the rescan
-    // grows with corpus TEXT while the sig form grows with corpus
-    // SIGNATURE metadata.
-    // (the dup-heavy ×1 pair ran once and is recorded in BENCH_COMPARE —
-    // sig 7.78 vs text 8.83 s — and dropped from the per-round set to
-    // bound bench growth; the ×10 pair keeps the adversarial bound
-    // measured every round)
-    "m_lsh_incr_sig_x10" -> ((s, dir) => {
-      val reg = lshRegistry(s, dir, 10)
-      val batch = lshBatch(s, dir)
-      // untimed count of the materialized registry = the size hint an
-      // ingest pipeline gets from footer metadata
-      // (VersionedLakeTable.approxRowCount); this batch re-arrives the
-      // whole corpus, so the adaptive rule skips the candidate
-      // semi-filter's probe tax here
-      val regRows = reg.count()
-      () => noop(graft.dedup.Dedup.incrementalDedupSigs(reg, batch,
-        "doc_id", "text", n = 2, bands = 16, rowsPerBand = 8,
-        threshold = 0.9, registrySizeHint = regRows).kept)
-    }),
-    "m_lsh_incr_text_x10" -> ((s, dir) => {
-      val corpus = docsTimes(s, dir, 10)
-      val batch = lshBatch(s, dir)
-      () => noop(graft.dedup.Dedup.incrementalDedup(
-        corpus.select(col("doc_id"), col("text")), batch,
-        "doc_id", "text", n = 2, bands = 16, rowsPerBand = 8,
-        threshold = 0.9))
-    }),
-    // the all-novel arrival twins: zero candidates, so the pair isolates
-    // what each form pays BEFORE any verification work — the dup-heavy
-    // entries above share a corpus-sized verify both forms must pay
-    // (their batch re-arrives the whole corpus), which masks the
-    // registry's advantage behind common cost
-    "m_lsh_incr_sig_novel_x1" -> ((s, dir) => {
-      val reg = lshRegistry(s, dir, 1)
-      val batch = lshNovelBatch(s, dir)
-      () => noop(graft.dedup.Dedup.incrementalDedupSigs(reg, batch,
-        "doc_id", "text", n = 2, bands = 16, rowsPerBand = 8,
-        threshold = 0.9).kept)
-    }),
-    "m_lsh_incr_sig_novel_x10" -> ((s, dir) => {
-      val reg = lshRegistry(s, dir, 10)
-      val batch = lshNovelBatch(s, dir)
-      () => noop(graft.dedup.Dedup.incrementalDedupSigs(reg, batch,
-        "doc_id", "text", n = 2, bands = 16, rowsPerBand = 8,
-        threshold = 0.9).kept)
-    }),
-    "m_lsh_incr_text_novel_x1" -> ((s, dir) => {
-      val corpus = docsTimes(s, dir, 1)
-      val batch = lshNovelBatch(s, dir)
-      () => noop(graft.dedup.Dedup.incrementalDedup(
-        corpus.select(col("doc_id"), col("text")), batch,
-        "doc_id", "text", n = 2, bands = 16, rowsPerBand = 8,
-        threshold = 0.9))
-    }),
-    "m_lsh_incr_text_novel_x10" -> ((s, dir) => {
-      val corpus = docsTimes(s, dir, 10)
-      val batch = lshNovelBatch(s, dir)
-      () => noop(graft.dedup.Dedup.incrementalDedup(
-        corpus.select(col("doc_id"), col("text")), batch,
-        "doc_id", "text", n = 2, bands = 16, rowsPerBand = 8,
-        threshold = 0.9))
     }),
     "m_q75_mat" -> ((s, dir) => {
       // q75's pricing aggregate over the MATERIALIZED 60M-row stream:
@@ -849,8 +682,6 @@ object ScaleBench {
         }
       ensure("asof_facts_bkt1000", asofFixturePath(s, dir, "facts", 1000))
       ensure("asof_dims_bkt1000", asofFixturePath(s, dir, "dims", 1000))
-      s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering",
-        "true")
       () => noop(graft.operators.AsofJoin.asofMerge(
         s.table("asof_facts_bkt1000"), s.table("asof_dims_bkt1000"),
         "user_id", "ts_us", Seq("state_id", "state_value")))
@@ -1032,25 +863,6 @@ object ScaleBench {
       () => noop(graft.graph.Triangles.perNode(e))
     }))
 
-  /** Entries whose QUESTION is answered and closed: the claim, the
-    * closing round, and the numbers live in BENCH_COMPARE, and re-paying
-    * their fixture + pass cost every round is what drove the bench past
-    * the driver's budget (r15 rc 124). The bench runs them only under
-    * SPARK_GRAFT_BENCH_FULL=1. Settled here:
-    *  - the six m_lsh_incr_* twins (r13: the signature registry's
-    *    per-batch floor beats corpus re-shingling 5.6–7.7× on novel
-    *    batches and the slope claim is recorded; ~70 s of passes + three
-    *    registry fixture builds per round to re-learn a closed answer);
-    *  - the wide2/wide3 heavy-hitter pairs are demoted the same way via
-    *    [[pairedEntries]] filtering in Bench (r13/r14: MG flat across
-    *    three vocabulary decades, groupBy OOMs at 4 GiB — the crossing
-    *    table is recorded; ~280 s + a 750M-token fixture per round). */
-  def settledNames: Set[String] = Set(
-    "m_lsh_incr_sig_x10", "m_lsh_incr_text_x10",
-    "m_lsh_incr_sig_novel_x1", "m_lsh_incr_sig_novel_x10",
-    "m_lsh_incr_text_novel_x1", "m_lsh_incr_text_novel_x10",
-    "m_hh_mg_wide2", "m_hh_full_wide2", "m_hh_mg_wide3", "m_hh_full_wide3")
-
   /** Entries the bench must run in a FRESH SparkContext (stop + rebuild,
     * one fixture pass untimed, min-of-2): the tens-of-seconds decade
     * passes, which both suffer and cause late-session heap/shuffle
@@ -1174,70 +986,4 @@ object ScaleBench {
           col("event_type"), col("ts_us"))
         .repartition(s.sparkContext.defaultParallelism)
     }
-
-  /** Time each side strictly interleaved — A,B,A,B,A,B — and return BOTH
-    * sides' full sample arrays (the bench records min into "queries" and
-    * the whole spread into "samples" — r12's run of record put one side
-    * 2× over same-protocol recordings, a dispute only per-run samples in
-    * the artifact can adjudicate). Both sides ride the same host
-    * conditions within one invocation, so a slow patch hits adjacent
-    * runs of BOTH sides instead of one whole side's sequential block.
-    * No separate warmup: the sides are tens of seconds, so first-read
-    * file-index listing is sub-1% and pass 1 is an honest sample
-    * (min-of-3 discards it if slow anyway). */
-  private def abSamples(rounds: Int)(a: () => Unit,
-      b: () => Unit): (Seq[Double], Seq[Double]) = {
-    def time(f: () => Unit): Double = {
-      val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-    }
-    val as = new Array[Double](rounds)
-    val bs = new Array[Double](rounds)
-    var i = 0
-    while (i < rounds) {
-      as(i) = time(a)
-      bs(i) = time(b)
-      i += 1
-    }
-    System.err.println(
-      f"[bench] abSamples A ${as.map(t => f"$t%.2f").mkString(" ")} | " +
-        f"B ${bs.map(t => f"$t%.2f").mkString(" ")}")
-    (as.toSeq, bs.toSeq)
-  }
-
-  private def abSamples3(a: () => Unit,
-      b: () => Unit): (Seq[Double], Seq[Double]) = abSamples(3)(a, b)
-
-  /** A/B pairs whose recorded CLAIM is the comparison itself, on a host
-    * whose run-to-run swing is the size of the effect: the wide2
-    * heavy-hitters pair flipped winners between isolated and full-bench
-    * runs twice (r10: 19.4-vs-20.5 isolated but 22.0-vs-17.9 in the run
-    * of record; r11: 26.7 vs 15.5), so sequential per-side timing cannot
-    * support any within-variance prose. One invocation runs both sides
-    * through [[abSamples3]] and the bench records both names from it,
-    * each pair in a fresh session with all samples in the artifact. */
-  def pairedEntries: Seq[((String, String),
-      (SparkSession, String) => () => (Seq[Double], Seq[Double]))] = Seq(
-    ("m_hh_mg_wide2", "m_hh_full_wide2") -> ((s, dir) => {
-      val toks = tokensWide2Fixture(s)
-      val mg = () => noop(HeavyHitters.exact(toks, k = 200))
-      val full = () => {
-        val n = toks.count()
-        noop(toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-          .filter(col("cnt") * 200 > n))
-      }
-      () => abSamples3(mg, full)
-    }),
-    // the third vocabulary decade ([[tokensWide3Fixture]]): min-of-2
-    // interleaved — each side is minutes, so two rounds bound the pair's
-    // bench cost while the samples still carry a spread
-    ("m_hh_mg_wide3", "m_hh_full_wide3") -> ((s, dir) => {
-      val toks = tokensWide3Fixture(s)
-      val mg = () => noop(HeavyHitters.exact(toks, k = 200))
-      val full = () => {
-        val n = toks.count()
-        noop(toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-          .filter(col("cnt") * 200 > n))
-      }
-      () => abSamples(2)(mg, full)
-    }))
 }

@@ -2,7 +2,9 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
+import graft.functions.SimHash64
 import graft.text.TextOps
 
 /** Deduplication operators for training-data pipelines, in increasing
@@ -233,6 +235,16 @@ object Dedup {
     df.join(dropSet, Seq(idCol), "left_anti")
   }
 
+  /** Free the cached blocks behind an eagerly-localCheckpointed frame.
+    * `Dataset.unpersist` only consults the cache manager, which never saw
+    * a checkpoint; the blocks belong to the underlying `LogicalRDD`'s RDD,
+    * so unpersist that directly. A frame that is not a checkpoint (no
+    * LogicalRDD at the root) is left untouched. */
+  private def unpersistLocalCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(blocking = false))
+
   /** Duplicate-cluster identification: connected components over a near-dup
     * pair set, labeling every document with the smallest doc id in its
     * component — the step that turns pairwise similarity into dedup groups
@@ -257,16 +269,6 @@ object Dedup {
     * cache per round until GC); the RETURNED frame is itself backed by the
     * final checkpoint, whose blocks are freed by the context cleaner once
     * the caller drops the frame. */
-  /** Free the cached blocks behind an eagerly-localCheckpointed frame.
-    * `Dataset.unpersist` only consults the cache manager, which never saw
-    * a checkpoint; the blocks belong to the underlying `LogicalRDD`'s RDD,
-    * so unpersist that directly. A frame that is not a checkpoint (no
-    * LogicalRDD at the root) is left untouched. */
-  private def unpersistLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = false))
-
   def connectedComponents(pairs: DataFrame, maxIterations: Int = 25): DataFrame = {
     val edges = pairs
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
@@ -330,7 +332,6 @@ object Dedup {
       s"maxHamming=$maxHamming: 4 bands of 16 bits guarantee candidate " +
         "generation only for Hamming distance <= 3 (pigeonhole); a larger " +
         "threshold would silently miss qualifying pairs — add bands instead")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val mapping = canonicalMapping(df, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -341,7 +342,8 @@ object Dedup {
       val hashed = df.join(repIds, Seq(idCol), "left_semi")
         .select(col(idCol).as("doc"),
           TextOps.tokens(col(textCol)).as("__w"))
-        .select(col("doc"), expr("simhash64(__w)").as("h"))
+        .select(col("doc"), ColumnBridge.column(
+          SimHash64(ColumnBridge.expression(col("__w")))).as("h"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val banded = hashed.select(col("doc"),
         explode(array((0 until 4).map(b =>

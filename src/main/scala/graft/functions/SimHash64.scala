@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -75,87 +74,5 @@ object SimHash64 {
       b += 1
     }
     out
-  }
-}
-
-/** Imperative registration for an already-running session (idempotent). */
-object GraftFunctions {
-
-  /** Lift a Column-composition operator into a SQL function builder — the
-    * curation building blocks (deterministic sampling buckets, tokenizer,
-    * language id, fingerprints …) are Column→Column functions over
-    * built-in expressions, so the SQL surface reuses them verbatim
-    * instead of re-deriving expression trees. */
-  private def fromColumns(name: String, arity: Int)(
-      f: Seq[org.apache.spark.sql.Column] => org.apache.spark.sql.Column)
-      : Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == arity,
-      s"$name expects $arity argument(s), got ${exprs.length}")
-    org.apache.spark.sql.graft.ColumnBridge.expression(
-      f(exprs.map(org.apache.spark.sql.graft.ColumnBridge.column)))
-  }
-
-  /** Every engine function the SQL surface exposes (§2.7 extended to the
-    * curation wave): the four native expressions plus the deterministic-
-    * curation scalars, one list feeding both registration paths. */
-  private[functions] val builders: Seq[(String, Seq[Expression] => Expression)] =
-    Seq(
-      "simhash64" -> (exprs => SimHash64(exprs.head)),
-      "vec_dot" -> (exprs => FloatDot(exprs(0), exprs(1))),
-      "unscaled_fixed" -> UnscaledFixed.build,
-      "pq_encode" ->
-        (exprs => PqEncode(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4))),
-      "token_buckets" -> (exprs => TokenBuckets(exprs(0), exprs(1))),
-      "fast_tokens" -> (exprs => FastTokens(exprs.head)),
-      // deterministic md5 sampling bucket in [0, 10000) / raw 32-bit form —
-      // the portable keep/split decision every sampler shares
-      "graft_bucket" ->
-        fromColumns("graft_bucket", 1)(c => graft.curate.Sampling.bucket(c.head)),
-      "graft_bucket32" ->
-        fromColumns("graft_bucket32", 1)(c => graft.curate.Sampling.bucket32(c.head)),
-      // the text pipeline's shared tokenizer + per-document scalars
-      "graft_normalize" ->
-        fromColumns("graft_normalize", 1)(c => graft.text.TextOps.normalized(c.head)),
-      "graft_words" -> (exprs => FastTokens(exprs.head)),
-      "graft_token_count" ->
-        fromColumns("graft_token_count", 1)(c =>
-          graft.text.TextOps.tokenCountWs(c.head)),
-      "graft_lang_id" ->
-        fromColumns("graft_lang_id", 1)(c => graft.text.TextOps.langId(
-          graft.text.TextOps.tokens(c.head))),
-      "graft_fingerprint" ->
-        fromColumns("graft_fingerprint", 1)(c =>
-          graft.text.TextOps.fingerprint(c.head)),
-      "graft_redact" ->
-        fromColumns("graft_redact", 1)(c => graft.text.TextOps.redact(c.head)),
-    )
-
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, b, "built-in")
-    }
-}
-
-/** The production injection point: `SparkSessionExtensions` hook, activated
-  * with `spark.sql.extensions=graft.functions.GraftExtensions` (or
-  * `builder.withExtensions(new GraftExtensions)`). Every session built with
-  * it has the engine's custom expressions without imperative setup. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    GraftFunctions.builders.foreach { case (name, b) =>
-      ext.injectFunction((
-        new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          GraftFunctions.getClass.getName, name),
-        b))
-    }
-    // sum(decimal)→unscaled-long fast path; disable with
-    // spark.graft.decimalFastPath=false. Injected BEFORE the reagg rule so
-    // a rollup's decimal sums go long first, then decompose as long sums.
-    ext.injectOptimizerRule(_ => graft.plans.DecimalSumFastPath)
-    // rollup/cube one-pass re-aggregation; disable with
-    // spark.graft.groupingSetReagg=false.
-    ext.injectOptimizerRule(_ => graft.plans.GroupingSetReagg)
   }
 }

@@ -108,17 +108,13 @@ object Triangles {
     else perNodeWedgeFromCanonical(und)
   }
 
-  /** Dense-regime threshold on estimated average degree; override with
-    * spark conf `graft.triangles.denseAvgDegree` (the two measured
+  /** Dense-regime threshold on estimated average degree (the two measured
     * regimes sit at ~12 and ~1000 — 64 splits them with wide margin on
     * both sides of the estimator's ≤2× error). */
   val DenseAvgDegree: Int = 64
 
   private[graft] def denseByEstimate(edges: DataFrame, srcCol: String,
       dstCol: String): Boolean = {
-    val thr = edges.sparkSession.conf
-      .getOption("graft.triangles.denseAvgDegree")
-      .map(_.toInt).getOrElse(DenseAvgDegree)
     val row = edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
@@ -129,7 +125,7 @@ object Triangles {
       .head()
     val m = row.getLong(0)
     val v = math.max(row.getLong(1), row.getLong(2))
-    v > 0 && 2.0 * m / v >= thr
+    v > 0 && 2.0 * m / v >= DenseAvgDegree
   }
 
   /** Intersection (edge-iterator) form over the oriented DAG: each
@@ -186,20 +182,15 @@ object Triangles {
     * the stage serialized through 48 GB of spill — same speed at 8 and
     * 32 cores (r16 driver artifact, ratio 1.03); sized to data the spill
     * disappears and the stage scales with cores again (stage tables in
-    * OPTIMIZATION_r17.md §0–1). Conf override:
-    * `graft.triangles.wedgePartitions`. An engine-wide AQE
+    * OPTIMIZATION_r17.md §0–1). An engine-wide AQE
     * initialPartitionNum was tried first and REFUTED — it breaks cached
     * co-partitioning reuse for every OTHER operator (OPTIMIZATION_r17.md
     * §0) — so the sizing lives here, scoped to the one plan that needs
     * it. */
   private def wedgePartitions(und: DataFrame): Int = {
-    val sess = und.sparkSession
-    sess.conf.getOption("graft.triangles.wedgePartitions")
-      .map(_.toInt).getOrElse {
-        val bytes = und.queryExecution.optimizedPlan.stats.sizeInBytes
-        val byData = (bytes / (4L * 1024 * 1024)).min(BigInt(4096)).toInt
-        math.max(sess.sparkContext.defaultParallelism, byData)
-      }
+    val bytes = und.queryExecution.optimizedPlan.stats.sizeInBytes
+    val byData = (bytes / (4L * 1024 * 1024)).min(BigInt(4096)).toInt
+    math.max(und.sparkSession.sparkContext.defaultParallelism, byData)
   }
 
   /** The wedge-join form (Suri–Vassilvitskii as literal joins) — the

@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.plans.{AsofCarry, AsofCarryStrategy}
+import graft.plans.AsofCarry
 
 /** As-of (point-in-time) join — the CDC-lake companion query: attach to
   * each fact row the LATEST state of its dimension key at-or-before the
@@ -37,17 +37,14 @@ import graft.plans.{AsofCarry, AsofCarryStrategy}
   * Determinism contract: at most ONE dim row per (key, ts) — pre-collapse
   * duplicates (e.g. `max(struct(...))` by a unique column) or the carried
   * state is sort-order dependent.
+  *
+  * Session contract: the carry and merge nodes are planned by
+  * [[graft.plans.AsofCarryStrategy]], which [[graft.functions.GraftExtensions]]
+  * injects — the session must carry those extensions (every
+  * [[graft.GraftSession]] session and its `newSession()` siblings do).
+  * [[asofWindow]] is stock operators only and runs anywhere.
   */
 object AsofJoin {
-
-  /** Register the carry strategy on the session (idempotent) through the
-    * PUBLIC experimental-strategies hook — works on plain sessions, no
-    * SparkSessionExtensions required. */
-  private def ensureStrategy(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsofCarryStrategy))
-      spark.experimental.extraStrategies = cur :+ AsofCarryStrategy
-  }
 
   /** The flat tagged union both forms share: the SHARED `keyCol`/`tsCol`
     * (real values on both sides — the contract requires both frames to
@@ -77,7 +74,6 @@ object AsofJoin {
 
   private def carry(df: DataFrame, keys: Seq[String], tsCol: String,
       payloadCols: Seq[String], factCols: Seq[String]): DataFrame = {
-    ensureStrategy(df.sparkSession)
     ColumnBridge.ofRows(df.sparkSession,
       AsofCarry(keys, tsCol, "__side", payloadCols, factCols,
         ColumnBridge.logicalPlan(df)))
@@ -163,7 +159,6 @@ object AsofJoin {
   def asofMerge(facts: DataFrame, dims: DataFrame, keyCol: String,
       tsCol: String, payloadCols: Seq[String]): DataFrame = {
     require(payloadCols.nonEmpty, "need at least one payload column")
-    ensureStrategy(facts.sparkSession)
     val dimSide = dims.select((keyCol +: tsCol +: payloadCols)
       .map(col): _*)
     ColumnBridge.ofRows(facts.sparkSession,

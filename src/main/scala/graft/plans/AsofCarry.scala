@@ -237,10 +237,10 @@ case class AsofCarryExec(keyCols: Seq[String], tsCol: String,
     copy(child = c)
 }
 
-/** Plans [[AsofCarry]] → [[AsofCarryExec]]. Registered per-session by
-  * [[graft.operators.AsofJoin]] through the PUBLIC
-  * `spark.experimental.extraStrategies` hook (idempotently), so the
-  * operator works on plain sessions without [[graft.functions.GraftExtensions]]. */
+/** Plans [[AsofCarry]] → [[AsofCarryExec]] and [[AsofMerge]] →
+  * [[AsofMergeExec]]. Injected by [[graft.functions.GraftExtensions]],
+  * so every session built with the engine's extensions plans both nodes
+  * without per-session setup. */
 object AsofCarryStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsofCarry(k, t, s, p, f, child) =>

@@ -31,7 +31,7 @@ import org.apache.spark.sql.types._
   *     double (`BigDecimal.doubleValue` on the same rational).
   *   - `decimalExpr` must decompose into fixed-scale leaves (precision
   *     ≤ 18, so the unscaled value is long-backed) combined by `*`, `+`,
-  *     `-`; the combined precision must stay ≤ [[maxPrecision]] so the
+  *     `-`; the combined precision must stay ≤ [[MaxPrecision]] so the
   *     per-row long product cannot wrap (10^18 < 2^63).
   *   - DISTINCT and FILTER aggregates, and float/double sums (order-
   *     sensitive) are left alone.
@@ -47,13 +47,11 @@ import org.apache.spark.sql.types._
 object DecimalSumFastPath extends Rule[LogicalPlan] {
 
   /** Combined-precision cap for the per-row long expression. 18 ⇒ the
-    * product is provably < 10^18 < 2^63 even for adversarial values; the
-    * default 19 admits the common price×(1−discount) shape (12+7 digits)
-    * where only ANSI's loud multiply-overflow check guards the last
-    * factor-of-9 headroom. */
-  private def maxPrecision: Int =
-    SQLConf.get.getConfString("spark.graft.decimalFastPath.maxPrecision",
-      "19").toInt
+    * product is provably < 10^18 < 2^63 even for adversarial values; 19
+    * admits the common price×(1−discount) shape (12+7 digits) where only
+    * ANSI's loud multiply-overflow check guards the last factor-of-9
+    * headroom. */
+  private val MaxPrecision = 19
 
   private def enabled: Boolean =
     SQLConf.get.getConfString("spark.graft.decimalFastPath", "true").toBoolean
@@ -103,19 +101,19 @@ object DecimalSumFastPath extends Rule[LogicalPlan] {
         for {
           (la, sa, pa) <- unscaled(a)
           (lb, sb, pb) <- unscaled(b)
-          if pa + pb <= maxPrecision
+          if pa + pb <= MaxPrecision
         } yield (Multiply(la, lb, mode), sa + sb, pa + pb)
       case Add(a, b, mode) if sameScaleDecimals(a, b) =>
         for {
           (la, sa, pa) <- unscaled(a)
           (lb, _, pb) <- unscaled(b)
-          if math.max(pa, pb) + 1 <= maxPrecision
+          if math.max(pa, pb) + 1 <= MaxPrecision
         } yield (Add(la, lb, mode), sa, math.max(pa, pb) + 1)
       case Subtract(a, b, mode) if sameScaleDecimals(a, b) =>
         for {
           (la, sa, pa) <- unscaled(a)
           (lb, _, pb) <- unscaled(b)
-          if math.max(pa, pb) + 1 <= maxPrecision
+          if math.max(pa, pb) + 1 <= MaxPrecision
         } yield (Subtract(la, lb, mode), sa, math.max(pa, pb) + 1)
       case UnaryMinus(a, failOnError) if a.dataType.isInstanceOf[DecimalType] =>
         unscaled(a).map { case (la, sa, pa) =>

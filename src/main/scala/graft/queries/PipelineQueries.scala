@@ -11,7 +11,6 @@ import graft.curate.{Decontaminate, Dsir, Interleave, Packing, Sampling, Select,
 import graft.sink.{KeyedLakeTable, LakeTableSpec}
 import graft.curate.Chunking
 import graft.dedup.{Dedup, SpanDedup}
-import graft.functions.GraftFunctions
 import graft.multimodal.{AudioDedup, AudioOps, Banded64, ImageDedup, ImageOps, MultimodalOps, VideoOps}
 import graft.sim.{ProductQuantize, Quantize, Similarity}
 import graft.graph.PageRank
@@ -468,7 +467,6 @@ object PipelineQueries {
     * and 5 (sf0.01); a RANDOM pair averages ≈18.4 of 64 bits, so the
     * bound separates signal from noise with margin on both sides. */
   def q72SimhashProximity(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val sh = docs(s, dir)
       .withColumn("words", TextOps.tokens(col("text")))
       .select(col("doc_id"), expr("simhash64(words)").as("h"))
@@ -626,7 +624,6 @@ object PipelineQueries {
     * goes red, per document. Hamming-vs-Jaccard proximity stays pinned
     * by hash-green q72. */
   def q50Simhash(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     docs(s, dir)
       .withColumn("words", TextOps.tokens(col("text")))
       .select(col("doc_id"),

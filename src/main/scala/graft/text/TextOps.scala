@@ -31,10 +31,10 @@ object TextOps {
     * profiling showed to be the single dominant cost of every tokenizing
     * query at corpus scale. This is the spelling every operator uses;
     * `words`/`normalized` remain for callers composing differently.
-    * Constructed DIRECTLY (not via the SQL registry) so every text
-    * operator works on a plain session without
-    * [[graft.functions.GraftExtensions]] — the registry is only the SQL
-    * surface's spelling. */
+    * Constructed DIRECTLY (not via the SQL registry) so no text
+    * operator depends on a function lookup: the `fast_tokens` /
+    * `graft_words` functions [[graft.functions.GraftExtensions]]
+    * registers are only the SQL surface's spelling. */
   def tokens(c: Column): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       graft.functions.FastTokens(

@@ -5,7 +5,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 import graft.dedup.Dedup
-import graft.functions.GraftFunctions
 import graft.multimodal.MultimodalOps
 import graft.queries.PipelineQueries
 import graft.sim.Similarity
@@ -147,8 +146,8 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("simhash64 resolves via SparkSessionExtensions injection alone") {
-    // TestSpark builds its session withExtensions(GraftExtensions) and this
-    // test deliberately does NOT call GraftFunctions.register.
+    // TestSpark builds its session withExtensions(GraftExtensions), the
+    // only place the engine registers its functions.
     val out = Seq("alpha beta").toDF("text")
       .selectExpr("simhash64(split(text, ' ')) AS h")
       .as[Long].collect()
@@ -172,7 +171,6 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("simhash64: deterministic, identical texts collide, near-dups are close") {
-    GraftFunctions.register(spark)
     def hashes(texts: Seq[String]) =
       texts.toDF("text")
         .withColumn("w", TextOps.words(TextOps.normalized(col("text"))))
