@@ -147,13 +147,12 @@ object MaintenanceBench {
     * would dwarf the thunk; the fold thunk re-applies the same batch
     * (same O(batch) work each pass, rows re-win under a later cycle). */
   private val jviewCache =
-    scala.collection.mutable.Map.empty[(Int, Boolean), (String, String, String)]
+    scala.collection.mutable.Map.empty[Int, (String, String, String)]
 
-  private def jviewFixture(s: SparkSession, dir: String, times: Int,
-      deferred: Boolean = false)
+  private def jviewFixture(s: SparkSession, dir: String, times: Int)
       : (JoinView, DataFrame, DataFrame, KeyedLakeTable) = {
     val (factPath, viewBase, batchPath) = jviewCache.synchronized {
-      jviewCache.getOrElseUpdate((times, deferred), {
+      jviewCache.getOrElseUpdate(times, {
         val parts = 720 // fixed dir count: the touched slice is 1/720 of
                         // the table at every knob (7200 dirs at x100 hits
                         // tiny-file listing pathology on BOTH sides and
@@ -179,7 +178,7 @@ object MaintenanceBench {
           partitionSource = "create_at", softDeleteCol = Some("is_deleted")))
         val dim = dimDf(s)
         val jv = new JoinView(s, s"$vb/view", s"$vb/orphans", Seq("id"),
-          "fk", "update_at", "create_at", deferred = deferred)
+          "fk", "update_at", "create_at")
         jv.applyCycle(fact.upsertChanges(rows), dim, dim, "dkey")
         // the recurring batch: strictly-newer versions of partition 0's
         // keys (the m_vmerge 1-partition shape) — the touched slice,
@@ -197,8 +196,7 @@ object MaintenanceBench {
       recordKeys = Seq("id"), precombine = "update_at",
       partitionSource = "create_at", softDeleteCol = Some("is_deleted")))
     val jv = new JoinView(s, s"$viewBase/view",
-      s"$viewBase/orphans", Seq("id"), "fk", "update_at", "create_at",
-      deferred = deferred)
+      s"$viewBase/orphans", Seq("id"), "fk", "update_at", "create_at")
     (jv, s.read.parquet(batchPath), dimDf(s), fact)
   }
 
@@ -360,10 +358,10 @@ object MaintenanceBench {
     // across x10 -> x100 (1M -> 10M fact rows) vs rebuild 6.9 -> 10.5 s
     // — the fold wins at BOTH knobs and the gap widens with the table,
     // because the fold's inputs stay the batch and the touched slice.
-    // The deferred (merge-on-read) fold mode measures WITHIN NOISE of
-    // the eager fold (6.1/6.3 s): the fold's constant is the fact-side
-    // change-feed computation plus O(dirs) listings, which both modes
-    // share — not the view-table merge writes the m_kmerge pair prices.
+    // Merge-on-read view writes do not move the fold (within noise,
+    // BENCH_COMPARE.md): its constant is the fact-side change-feed
+    // computation plus O(dirs) listings, not the view-table merge writes
+    // the m_kmerge pair prices.
     // The asymptotic is carried by the m_vmerge flatness pair (merge
     // cost follows TOUCHED partitions, not table size).
     "m_jview_fold_x10" -> ((s, dir) => {
@@ -372,19 +370,6 @@ object MaintenanceBench {
     }),
     "m_jview_fold_x100" -> ((s, dir) => {
       val (jv, batch, dim, fact) = jviewFixture(s, dir, 100)
-      () => jv.applyCycle(fact.upsertChanges(batch), dim.limit(0), dim, "dkey")
-    }),
-    // deferred (merge-on-read) fold: the same cycle with the view's two
-    // state tables taking O(batch) APPEND commits instead of eager
-    // touched-partition merges — the m_kmerge pair prices that swap at
-    // ~2.4-2.7x cheaper writes, so this is the mode that should carry
-    // the fold below the eager fold's two-merge constant at small knobs
-    "m_jview_fold_mor_x10" -> ((s, dir) => {
-      val (jv, batch, dim, fact) = jviewFixture(s, dir, 10, deferred = true)
-      () => jv.applyCycle(fact.upsertChanges(batch), dim.limit(0), dim, "dkey")
-    }),
-    "m_jview_fold_mor_x100" -> ((s, dir) => {
-      val (jv, batch, dim, fact) = jviewFixture(s, dir, 100, deferred = true)
       () => jv.applyCycle(fact.upsertChanges(batch), dim.limit(0), dim, "dkey")
     }),
     // the rebuild cycle must pay its OWN batch ingest: the alternative to

@@ -767,15 +767,6 @@ object ScaleBench {
       () => noop(graft.text.LineClean.dropRepeatedLines(
         d, "doc_id", "text", maxDocs = 2))
     }),
-    // the reassembly-free broadcast-probe twin (same bits —
-    // LineCleanSpec): whichever form the artifact shows faster at ×100
-    // is the recorded recommendation for the broadcast-sized-hot-set
-    // regime
-    "m_linededup_ip_x100" -> ((s, dir) => {
-      val d = linedTimes(s, dir, 100)
-      () => noop(graft.text.LineClean.dropRepeatedLinesInPlace(
-        d, "doc_id", "text", maxDocs = 2))
-    }),
     "m_funnel_x100" -> ((s, dir) => {
       val e = eventsTimes(s, dir, 100)
       () => noop(graft.queries.CdcQueries.funnelOf(e))
@@ -871,7 +862,7 @@ object ScaleBench {
   def freshNames: Set[String] = Set(
     "m_pagerank_x10", "m_pagerank_x100", "m_ppr_x10", "m_ppr_x100",
     "m_triangles_x10", "m_triangles_x100", "m_triangles_x1000",
-    "m_linededup_x100", "m_linededup_ip_x100",
+    "m_linededup_x100",
     "m_funnel_x100", "m_cohort_x100",
     "m_q42_x10", "m_spagerank_fold_x10", "m_spagerank_rebuild_x10",
     "m_spagerank_fold_x100", "m_spagerank_rebuild_x100",

@@ -26,9 +26,10 @@ object Dedup {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Per-session recall-loss metric: total over-cap buckets dropped by the
-    * banded paths since the session started. Registered as a named Spark
-    * accumulator (visible in the UI / metrics sinks on a real cluster) and
-    * readable here, so callers can detect reduced near-dup recall
+    * banded paths (text LSH, SimHash and the media `Banded64` engine)
+    * since the session started. Registered as a named Spark accumulator
+    * (visible in the UI / metrics sinks on a real cluster) and readable
+    * here, so callers can detect reduced near-dup recall
     * programmatically instead of scraping logs (ADVICE r3). Weak keys: a
     * retired session releases its counter. */
   private val droppedAcc =
@@ -111,9 +112,10 @@ object Dedup {
         coalesce(max(col("__n")), lit(0L)).as("largest"))
       .head()
     if (over.getLong(0) > 0) {
-      val msg = s"$tag: ${over.getLong(0)} bucket(s) larger than " +
-        s"$maxBucket docs (largest=${over.getLong(1)}); near-dup recall for " +
-        "their members is reduced — raise maxBucket or pre-filter boilerplate"
+      val msg = s"$tag: ${over.getLong(0)} band bucket(s) larger than " +
+        s"$maxBucket (largest=${over.getLong(1)}); near-dup recall for " +
+        "their members is reduced — raise maxBucket or pre-filter degenerate " +
+        "inputs (boilerplate, black frames, silence)"
       if (strict) throw new IllegalStateException(
         s"$msg (strictBuckets=true fails instead of dropping)")
       dropCounter(bandSigs.sparkSession).add(over.getLong(0))
@@ -129,6 +131,53 @@ object Dedup {
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"))
       .distinct()
+  }
+
+  /** Near-dup pairs among distinct 64-bit fingerprints — the banded core of
+    * [[simHashNearDup]] and [[graft.multimodal.Banded64]]: four 16-bit
+    * bands (pigeonhole: Hamming ≤ 3 leaves at least one band equal), the
+    * capped [[bucketPairs]] candidates, then the codegen'd `bit_count(xor)`
+    * check. `hashed` holds one row per representative (`doc` long, `h`
+    * long) and is read three times, so callers persist it. Returns
+    * (`doc_a` < `doc_b`, `hamming` int). */
+  private[graft] def hammingPairs64(hashed: DataFrame, maxHamming: Int,
+      maxBucket: Int, tag: String, strict: Boolean): DataFrame = {
+    val banded = hashed.select(col("doc"),
+      explode(array((0 until 4).map(b =>
+        struct(lit(b).as("band"),
+          shiftright(col("h"), b * 16).bitwiseAND(lit(0xFFFFL)).as("sig"))): _*))
+        .as("bs"))
+      .select(col("doc"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+    bucketPairs(banded, maxBucket, tag, strict)
+      .join(hashed.select(col("doc").as("doc_a"), col("h").as("h_a")), "doc_a")
+      .join(hashed.select(col("doc").as("doc_b"), col("h").as("h_b")), "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        bit_count(col("h_a").bitwiseXOR(col("h_b"))).as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+  }
+
+  /** Member-level pairs from representative-level ones: members of one
+    * exact group pair with each other at score `exact`, and every member
+    * inherits its representative's pairs with their `score`. `members` is
+    * (`rep`, `doc`); `repPairs` is (`doc_a`, `doc_b`, `score`) over
+    * representatives. Both are linear and are checkpointed eagerly here;
+    * the expansion stays lazy, because it is quadratic in exact-group size
+    * BY CONTRACT (it IS the answer) and must stream out of joins, never sit
+    * in a buffer. */
+  private[graft] def expandMembers(members: DataFrame, repPairs: DataFrame,
+      score: String, exact: Any): DataFrame = {
+    val mCk = members.localCheckpoint(true)
+    val pairCk = repPairs.localCheckpoint(true)
+    val within = mCk.select(col("rep"), col("doc").as("doc_a"))
+      .join(mCk.select(col("rep"), col("doc").as("doc_b")), "rep")
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"), lit(exact).as(score))
+    val cross = pairCk
+      .join(mCk.select(col("rep").as("doc_a"), col("doc").as("a")), "doc_a")
+      .join(mCk.select(col("rep").as("doc_b"), col("doc").as("b")), "doc_b")
+      .select(least(col("a"), col("b")).as("doc_a"),
+        greatest(col("a"), col("b")).as("doc_b"), col(score))
+    within.unionByName(cross)
   }
 
   /** Per-document distinct word-n-gram shingle sets, exploded to
@@ -345,35 +394,11 @@ object Dedup {
         .select(col("doc"), ColumnBridge.column(
           SimHash64(ColumnBridge.expression(col("__w")))).as("h"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val banded = hashed.select(col("doc"),
-        explode(array((0 until 4).map(b =>
-          struct(lit(b).as("band"),
-            shiftright(col("h"), b * 16).bitwiseAND(lit(0xFFFFL)).as("sig"))): _*))
-          .as("bs"))
-        .select(col("doc"), col("bs.band").as("band"), col("bs.sig").as("sig"))
-      val repPairs = bucketPairs(banded, maxBucket, "simHashNearDup", strictBuckets)
-        .join(hashed.select(col("doc").as("doc_a"), col("h").as("h_a")), "doc_a")
-        .join(hashed.select(col("doc").as("doc_b"), col("h").as("h_b")), "doc_b")
-        .select(col("doc_a"), col("doc_b"),
-          bit_count(col("h_a").bitwiseXOR(col("h_b"))).as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-
-      // checkpoint the LINEAR frames eagerly (mapping: one row per doc;
-      // repPairs: true near-dups among distinct contents), then expand
-      // lazily — the quadratic member-level pair set is never buffered here
-      val mapCk = mapping.localCheckpoint(true)
-      val pairCk = repPairs.localCheckpoint(true)
-      hashed.unpersist(false) // fully consumed by the eager pairCk
-      val within = mapCk.select(col("rep"), col("doc").as("doc_a"))
-        .join(mapCk.select(col("rep"), col("doc").as("doc_b")), "rep")
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"), lit(0).as("hamming"))
-      val cross = pairCk
-        .join(mapCk.select(col("rep").as("doc_a"), col("doc").as("a")), "doc_a")
-        .join(mapCk.select(col("rep").as("doc_b"), col("doc").as("b")), "doc_b")
-        .select(least(col("a"), col("b")).as("doc_a"),
-          greatest(col("a"), col("b")).as("doc_b"), col("hamming"))
-      within.unionByName(cross)
+      val repPairs = hammingPairs64(hashed, maxHamming, maxBucket,
+        "simHashNearDup", strictBuckets)
+      val pairs = expandMembers(mapping, repPairs, "hamming", 0)
+      hashed.unpersist(false) // fully consumed by the eager repPairs checkpoint
+      pairs
     } finally mapping.unpersist(false)
   }
 
@@ -406,31 +431,15 @@ object Dedup {
     val core = lshCore(df, idCol, textCol, n, bands, rowsPerBand, threshold,
       maxBucket, strictBuckets)
     try {
-      // checkpoint the LINEAR frames eagerly (mapping: one row per doc;
-      // repPairs: near-dup pairs among distinct contents; shingled: one row
-      // per distinct content), then expand to member-level pairs lazily —
-      // the expansion is quadratic in exact-group size BY CONTRACT (it IS
-      // the answer) and must stream out of joins, never sit in a buffer.
       // exact duplicates of a SHINGLED content are Jaccard-1.0 pairs (docs
-      // with no shingles never pair — matches the exact-Jaccard semantics).
-      // Every doc referenced by repPairs has shingles, so ONE checkpointed
-      // frame (members of shingled groups) serves both expansions.
-      val mCk = core.mapping
-        .join(core.sizes.select(col("doc").as("rep")), "rep")
-        .localCheckpoint(true)
-      val pairCk = core.repPairs.localCheckpoint(true)
-      val within = mCk.select(col("rep"), col("doc").as("doc_a"))
-        .join(mCk.select(col("rep"), col("doc").as("doc_b")), "rep")
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"), lit(1.0).as("jaccard"))
-      // members inherit their canonical's matches with the identical
-      // jaccard value (identical normalized text ⇒ identical shingle set)
-      val cross = pairCk
-        .join(mCk.select(col("rep").as("doc_a"), col("doc").as("a")), "doc_a")
-        .join(mCk.select(col("rep").as("doc_b"), col("doc").as("b")), "doc_b")
-        .select(least(col("a"), col("b")).as("doc_a"),
-          greatest(col("a"), col("b")).as("doc_b"), col("jaccard"))
-      within.unionByName(cross)
+      // with no shingles never pair — matches the exact-Jaccard semantics),
+      // and members inherit their canonical's matches with the identical
+      // jaccard value (identical normalized text ⇒ identical shingle set).
+      // Every doc referenced by repPairs has shingles, so ONE members frame
+      // (members of shingled groups) serves both expansions.
+      expandMembers(
+        core.mapping.join(core.sizes.select(col("doc").as("rep")), "rep"),
+        core.repPairs, "jaccard", 1.0)
     } finally core.release()
   }
 

@@ -3,45 +3,27 @@ package graft.multimodal
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.dedup.Dedup
+
 /** Shared near-dup engine over 64-bit media fingerprints (image aHash,
   * audio energy-hash, any future modality): exact-fingerprint pre-collapse
-  * → 4×16-bit banded candidate generation → codegen'd `bit_count` Hamming
-  * verification → member re-expansion. Pigeonhole makes 4 bands exhaustive
-  * for Hamming ≤ 3; banding keeps candidates a groupBy, never all-pairs.
+  * → the text SimHash path's banded core ([[Dedup.hammingPairs64]]: 4×16-bit
+  * bands, capped candidates, codegen'd `bit_count` Hamming verification) →
+  * member re-expansion ([[Dedup.expandMembers]]). Pigeonhole makes 4 bands
+  * exhaustive for Hamming ≤ 3; banding keeps candidates a groupBy, never
+  * all-pairs.
   *
-  * Degenerate-band guard (same contract as the text LSH paths,
-  * [[graft.dedup.Dedup]] bucketPairs): a band self-join on 16-bit
-  * signatures has 2^16 buckets per band, so n distinct fingerprints
-  * sharing a band value (black frames, silence, constant-color thumbnails)
-  * produce a ~n²/2 candidate blow-up. Buckets larger than `maxBucket`
-  * DISTINCT fingerprints are dropped from candidate generation — a
-  * recall-vs-survival trade the operator must not make silently: every
-  * drop increments [[droppedBuckets]] and logs loudly, and
-  * `strictBuckets = true` fails the job instead. Exact duplicates are
-  * unaffected (they collapse to one representative before banding and
-  * re-expand through the members join). */
+  * Degenerate-band guard (the text LSH paths' contract, [[Dedup]]
+  * bucketPairs): a band self-join on 16-bit signatures has 2^16 buckets
+  * per band, so n distinct fingerprints sharing a band value (black
+  * frames, silence, constant-color thumbnails) produce a ~n²/2 candidate
+  * blow-up. Buckets larger than `maxBucket` DISTINCT fingerprints are
+  * dropped from candidate generation — a recall-vs-survival trade the
+  * operator must not make silently: every drop increments
+  * [[Dedup.droppedBuckets]] and logs loudly, and `strictBuckets = true`
+  * fails the job instead. Exact duplicates are unaffected (they collapse
+  * to one representative before banding and re-expand afterwards). */
 object Banded64 {
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Count of over-cap band buckets dropped in `spark`'s lifetime —
-    * programmatic visibility so callers can alert on recall loss instead
-    * of scraping logs. Weak keys: a retired session releases its counter. */
-  private val droppedAcc =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-        org.apache.spark.util.LongAccumulator]())
-  def droppedBuckets(spark: org.apache.spark.sql.SparkSession): Long =
-    Option(droppedAcc.get(spark)).map(_.value.longValue).getOrElse(0L)
-  private def dropCounter(spark: org.apache.spark.sql.SparkSession) =
-    droppedAcc.synchronized {
-      var acc = droppedAcc.get(spark)
-      if (acc == null) {
-        acc = spark.sparkContext.longAccumulator("graft.media.droppedBuckets")
-        droppedAcc.put(spark, acc)
-      }
-      acc
-    }
 
   /** `hashed` must have columns (`media_id` long, `fp` long). Returns
     * (id_a, id_b, hamming) for every pair within `maxHamming` whose band
@@ -51,53 +33,21 @@ object Banded64 {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"Banded64: 4x16-bit bands are exhaustive only for maxHamming <= 3, got $maxHamming")
     // one banding representative per distinct fingerprint: k identical
-    // media items otherwise flood every band bucket (the text paths' r2 lesson)
-    val rep = hashed.groupBy(col("fp")).agg(min(col("media_id")).as("rep"))
-    val bands = (0 until 4).map { b =>
-      rep.select(col("fp"), col("rep"),
-        lit(b).as("band"), shiftright(col("fp"), b * 16).bitwiseAND(0xffffL).as("sig"))
-    }.reduce(_ unionByName _)
-    // cap candidate generation per (band, sig) bucket — the hot-band guard
-    val bucketCounts = bands.groupBy(col("band"), col("sig"))
-      .agg(count(lit(1)).as("__n"))
-    val over = bucketCounts.filter(col("__n") > maxBucket)
-      .agg(count(lit(1)).as("buckets"),
-        coalesce(max(col("__n")), lit(0L)).as("largest"))
-      .head()
-    if (over.getLong(0) > 0) {
-      val msg = s"Banded64: ${over.getLong(0)} band bucket(s) larger than " +
-        s"$maxBucket distinct fingerprints (largest=${over.getLong(1)}); " +
-        "near-dup recall for their members is reduced — raise maxBucket or " +
-        "pre-filter degenerate media (black frames, silence)"
-      if (strictBuckets) throw new IllegalStateException(
-        s"$msg (strictBuckets=true fails instead of dropping)")
-      dropCounter(hashed.sparkSession).add(over.getLong(0))
-      log.warn(s"$msg (dropping; see Banded64.droppedBuckets)")
-    }
-    val ok = bucketCounts.filter(col("__n") <= maxBucket)
-      .select(col("band"), col("sig"))
-    val prunedBands = bands.join(ok, Seq("band", "sig"))
-    val candidates = prunedBands.as("x").join(prunedBands.as("y"),
-        col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
-          col("x.rep") < col("y.rep"))
-      .select(col("x.fp").as("h_a"), col("x.rep").as("rep_a"),
-        col("y.fp").as("h_b"), col("y.rep").as("rep_b"))
-      .distinct()
-      .filter(bit_count(col("h_a").bitwiseXOR(col("h_b"))) <= maxHamming)
-    // expand representatives back to members (identical fingerprints = Hamming 0)
-    val members = hashed.join(rep, "fp").select(col("rep"), col("media_id"))
-    val within = members.as("m").join(members.as("n"),
-        col("m.rep") === col("n.rep") && col("m.media_id") < col("n.media_id"))
-      .select(col("m.media_id").as("id_a"), col("n.media_id").as("id_b"),
-        lit(0).as("hamming"))
-    val cross = candidates
-      .join(members.withColumnRenamed("rep", "rep_a"), "rep_a")
-      .withColumnRenamed("media_id", "a")
-      .join(members.withColumnRenamed("rep", "rep_b"), "rep_b")
-      .withColumnRenamed("media_id", "b")
-      .select(least(col("a"), col("b")).as("id_a"),
-        greatest(col("a"), col("b")).as("id_b"),
-        bit_count(col("h_a").bitwiseXOR(col("h_b"))).cast("int").as("hamming"))
-    within.unionByName(cross)
+    // media items otherwise flood every band bucket (the text paths' r2
+    // lesson). One row per item; persisted so the fingerprints are
+    // computed once for banding and expansion.
+    val fps = hashed.select(col("media_id").as("doc"), col("fp").as("h"))
+    val mapping = fps
+      .join(fps.groupBy(col("h")).agg(min(col("doc")).as("rep")), "h")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val reps = mapping.filter(col("doc") === col("rep"))
+        .select(col("doc"), col("h"))
+      val repPairs = Dedup.hammingPairs64(reps, maxHamming, maxBucket,
+        "Banded64", strictBuckets)
+      Dedup.expandMembers(mapping.select(col("rep"), col("doc")), repPairs,
+          "hamming", 0)
+        .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"), col("hamming"))
+    } finally mapping.unpersist(false)
   }
 }

@@ -64,13 +64,6 @@ import graft.sink.{KeyedLakeTable, LakeTableSpec}
   * upserts assume a single writer. Multi-writer tables are
   * [[graft.sink.VersionedLakeTable]]'s OCC territory.
   *
-  * `deferred = true` switches both state tables to MERGE-ON-READ writes
-  * ([[KeyedLakeTable.upsertDeferred]]): each cycle's batches APPEND and
-  * the latest-wins dedup happens at read — sound here because (cycle,
-  * fact-precombine) totally orders a key's versions (cycles differ
-  * across folds; within one fold the batches are key-disjoint). Call
-  * [[compact]] when read amplification accumulates.
-  *
   * Exactness contract (q142): after any interleaving of fact and dim
   * batches, [[readLive]] equals latest-wins(facts, live) INNER JOIN
   * latest-wins(dims) recomputed from scratch — orphan promotion, fk
@@ -83,8 +76,7 @@ final class JoinView(
     factKeys: Seq[String],
     fkCol: String,
     factPrecombine: String,
-    partitionSource: String,
-    deferred: Boolean = false) {
+    partitionSource: String) {
 
   private val dead = "__dead"
   private val cycleCol = "__cycle"
@@ -106,29 +98,18 @@ final class JoinView(
       java.nio.file.Files.readString(cyclePath).trim.toLong
     else 0L
 
-  private def live(t: KeyedLakeTable): DataFrame =
-    if (deferred) t.readLiveMerged() else t.readLive()
-
   /** Live view rows — the maintained join (fact columns + dim attrs). */
   def readLive(): DataFrame = {
     val keep = view.read().columns
       .filterNot(Seq(dead, cycleCol).contains)
-    live(view).select(keep.map(col): _*)
+    view.readLive().select(keep.map(col): _*)
   }
 
   /** Outstanding facts waiting for their dimension row. */
   def readOrphans(): DataFrame = {
     val keep = orphans.read().columns
       .filterNot(Seq(dead, cycleCol).contains)
-    live(orphans).select(keep.map(col): _*)
-  }
-
-  /** Deferred mode only: fold both state tables' accumulated versions
-    * back to one winner per key (the pay-once read-cost reset). */
-  def compact(): Unit = {
-    require(deferred, "compact() is the merge-on-read maintenance pass")
-    view.compactMerged()
-    if (orphans.exists) orphans.compactMerged()
+    orphans.readLive().select(keep.map(col): _*)
   }
 
   /** Fold one cycle. `factChanges`: the fact table's
@@ -145,11 +126,12 @@ final class JoinView(
     val c = cycle
     // Burn the cycle ordinal BEFORE any write, atomically (temp file +
     // ATOMIC_MOVE): a crash mid-cycle then restarts on a FRESH ordinal, so
-    // the replay strictly outranks any partial write — reusing the ordinal
-    // would make (cycle, factPrecombine) tie between the partial write and
-    // the replay and pick a nondeterministic winner in deferred mode. A
-    // torn counter file can no longer exist; a burned-but-unused ordinal
-    // is harmless (the precombine only needs to be monotone, not dense).
+    // the replay strictly outranks any partial write. Reusing the ordinal
+    // would leave the tieBreak (factPrecombine), not the write order, to
+    // pick between a partial write's row and the replay's row for the same
+    // key. A torn counter file can no longer exist; a burned-but-unused
+    // ordinal is harmless (the precombine only needs to be monotone, not
+    // dense).
     persistCycle(c)
     val dsnap = dimSnap.withColumnRenamed(dimKey, dimk)
     val ddelta = dimDelta.withColumnRenamed(dimKey, dimk)
@@ -204,7 +186,7 @@ final class JoinView(
     val promoted =
       if (!hasDimDelta || !orphans.exists) None
       else Some(notFactTouched(
-          live(orphans).select(rowCols.map(col): _*))
+          orphans.readLive().select(rowCols.map(col): _*))
         .join(ddelta, col(fkCol) === col(dimk)) // AQE broadcasts small deltas
         .localCheckpoint(true)) // one source, two writes (view + tombstone)
     val promoteView = promoted.map(_.select(
@@ -215,7 +197,7 @@ final class JoinView(
     val refresh =
       if (!hasDimDelta || !view.exists) None
       else Some(notFactTouched(
-          live(view).select(rowCols.map(col): _*))
+          view.readLive().select(rowCols.map(col): _*))
         .join(ddelta, col(fkCol) === col(dimk)) // AQE broadcasts small deltas
         .select(rowCols.map(col) ++ dimAttrs.map(col) :+
           lit(false).as(dead) :+ lit(c).as(cycleCol): _*))
@@ -229,7 +211,7 @@ final class JoinView(
     // cycle ordering already stops an older live row from resurrecting).
     val orphanLiveKeys =
       if (!orphans.exists) None
-      else Some(live(orphans).select(factKeys.map(col): _*))
+      else Some(orphans.readLive().select(factKeys.map(col): _*))
     val orphanAdds = orphanFactBatch.filter(!col(dead))
     val orphanKills = orphanLiveKeys match {
       case Some(live) => orphanFactBatch.filter(col(dead))
@@ -238,12 +220,10 @@ final class JoinView(
     }
     val viewBatch = (Seq(viewFactBatch) ++ promoteView ++ refresh)
       .reduce(_ unionByName _)
-    def write(t: KeyedLakeTable, b: DataFrame): Unit =
-      if (deferred) t.upsertDeferred(b) else t.upsert(b)
-    if (!viewBatch.isEmpty) write(view, viewBatch)
+    if (!viewBatch.isEmpty) view.upsert(viewBatch)
     val orphanBatch = (Seq(orphanAdds, orphanKills) ++ promoteOrphanGone)
       .reduce(_ unionByName _)
-    if (!orphanBatch.isEmpty) write(orphans, orphanBatch)
+    if (!orphanBatch.isEmpty) orphans.upsert(orphanBatch)
   }
 
   private def persistCycle(c: Long): Unit = {

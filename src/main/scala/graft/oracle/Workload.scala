@@ -90,7 +90,4 @@ object Workload {
     * database's row after applying the log in order). */
   def expectedTxnState(log: Log): Seq[Txn] =
     log.txns.groupBy(_.id).map { case (_, vs) => vs.last }.toSeq
-
-  def expectedAccountState(log: Log): Seq[Account] =
-    log.accounts.groupBy(_.id).map { case (_, vs) => vs.last }.toSeq
 }

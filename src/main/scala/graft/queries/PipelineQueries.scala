@@ -28,6 +28,30 @@ import graft.text.{Bpe, HashClassifier, HeavyHitters, LineClean, NgramLM, Repeti
   */
 object PipelineQueries {
 
+  /** The arrival-ordered micro-batch source of the streamed entries
+    * (q150–q170): batch i of `batches` lands as the single file
+    * `b<i>.parquet` with mtime 1000000000000 + i·60000 ms — explicit,
+    * strictly increasing mtimes, because the arrival order IS the
+    * semantics and must not ride on write-timing luck — and the stream
+    * takes one file per trigger. `tag` names the temp dirs. */
+  private def mtimeOrderedStream(s: SparkSession, tag: String,
+      batches: Seq[DataFrame]): DataFrame = {
+    import java.nio.file.{Files, Paths}
+    val srcDir = Files.createTempDirectory(s"graft_${tag}_src").toString
+    batches.zipWithIndex.foreach { case (batch, b) =>
+      val stage = Files.createTempDirectory(s"graft_${tag}_b$b").toString
+      batch.repartition(1).write.mode("overwrite").parquet(stage)
+      val part = Files.list(Paths.get(stage)).iterator().asScala
+        .find(_.getFileName.toString.startsWith("part-")).get
+      val dst = Paths.get(srcDir, s"b$b.parquet")
+      Files.move(part, dst)
+      Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + b * 60000L))
+    }
+    graft.streaming.CdcStreamIngest.fileStream(s, srcDir,
+      batches.head.schema, maxFilesPerTrigger = 1)
+  }
+
   /** The corpus ships these tables as single small parquet files, which
     * Spark reads as ONE partition — serializing every per-row operator on
     * one core. Spread them across the cluster when (and only when) the
@@ -1602,27 +1626,14 @@ object PipelineQueries {
     * through the real streaming machinery, checkpointing, and both lake
     * tables rather than two manual calls. */
   def q150StreamSemdedup(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val e = embs(s, dir)
       .withColumn("create_at", lit("2000-01-01T00:00:00.000000+0000"))
       .withColumn("update_at", lit("2000-01-01T00:00:00.000000+0000"))
     val centroids = embs(s, dir).groupBy(col("label"))
       .agg(graft.sim.VectorMean.column(col("embedding")).as("embedding"))
       .localCheckpoint(true)
-    val srcDir = Files.createTempDirectory("graft_q150_src").toString
-    (0 until 3).foreach { b =>
-      val stage = Files.createTempDirectory(s"graft_q150_b$b").toString
-      e.filter(pmod(col("vec_id"), lit(3)) === b)
-        .repartition(1).write.mode("overwrite").parquet(stage)
-      val part = Files.list(Paths.get(stage)).iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-")).get
-      val dst = Paths.get(srcDir, f"b$b%d.parquet")
-      Files.move(part, dst)
-      // explicit, strictly increasing mtimes: the arrival order IS the
-      // semantics, so it must not ride on write-timing luck
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + b * 60000L))
-    }
+    val batches = (0 until 3).map(b => e.filter(pmod(col("vec_id"), lit(3)) === b))
     val kept = new KeyedLakeTable(s, LakeTableSpec(
       Files.createTempDirectory("graft_q150_kept").toString,
       recordKeys = Seq("vec_id"), precombine = "update_at",
@@ -1632,8 +1643,7 @@ object PipelineQueries {
       recordKeys = Seq("vec_id"), precombine = "update_at",
       partitionSource = "create_at", tieBreak = Seq("vec_id")))
     graft.streaming.CdcStreamIngest.toSemanticDedupTable(
-      s.readStream.schema(e.schema).option("maxFilesPerTrigger", 1)
-        .parquet(srcDir),
+      mtimeOrderedStream(s, "q150", batches),
       "vec_id", "embedding", "label", () => centroids, tau = 0.3,
       kept, registry,
       Files.createTempDirectory("graft_q150_ckpt").toString)
@@ -1655,25 +1665,15 @@ object PipelineQueries {
     * checkpointing, and both lake tables all have to land on the
     * one-shot answer's bits. */
   def q151StreamSpandedup(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val d = docs(s, dir)
       .withColumn("create_at", lit("2000-01-01T00:00:00.000000+0000"))
       .withColumn("update_at", lit("2000-01-01T00:00:00.000000+0000"))
     val cuts = d.stat.approxQuantile("doc_id", Array(0.33, 0.66), 0.001)
-    val srcDir = Files.createTempDirectory("graft_q151_src").toString
     val bounds = Seq((Long.MinValue, cuts(0).toLong),
       (cuts(0).toLong, cuts(1).toLong), (cuts(1).toLong, Long.MaxValue))
-    bounds.zipWithIndex.foreach { case ((lo, hi), b) =>
-      val stage = Files.createTempDirectory(s"graft_q151_b$b").toString
-      d.filter(col("doc_id") > lo && col("doc_id") <= hi)
-        .repartition(1).write.mode("overwrite").parquet(stage)
-      val part = Files.list(Paths.get(stage)).iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-")).get
-      val dst = Paths.get(srcDir, s"b$b.parquet")
-      Files.move(part, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + b * 60000L))
-    }
+    val batches = bounds.map { case (lo, hi) =>
+      d.filter(col("doc_id") > lo && col("doc_id") <= hi) }
     val cleaned = new KeyedLakeTable(s, LakeTableSpec(
       Files.createTempDirectory("graft_q151_clean").toString,
       recordKeys = Seq("doc_id"), precombine = "update_at",
@@ -1683,8 +1683,7 @@ object PipelineQueries {
       recordKeys = Seq("h"), precombine = "update_at",
       partitionSource = "create_at", tieBreak = Seq("batch_id")))
     graft.streaming.CdcStreamIngest.toSpanDedupTable(
-      s.readStream.schema(d.schema).option("maxFilesPerTrigger", 1)
-        .parquet(srcDir),
+      mtimeOrderedStream(s, "q151", batches),
       "doc_id", "text", k = 3, cleaned, registry,
       Files.createTempDirectory("graft_q151_ckpt").toString)
     cleaned.read()
@@ -1709,25 +1708,15 @@ object PipelineQueries {
     * accumulation, the batch-id replay guard, checkpointing, and both
     * lake tables all have to land on the exact pair set's answer. */
   def q153StreamNeardup(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val d = docs(s, dir)
       .withColumn("create_at", lit("2000-01-01T00:00:00.000000+0000"))
       .withColumn("update_at", lit("2000-01-01T00:00:00.000000+0000"))
     val cuts = d.stat.approxQuantile("doc_id", Array(0.33, 0.66), 0.001)
-    val srcDir = Files.createTempDirectory("graft_q153_src").toString
     val bounds = Seq((Long.MinValue, cuts(0).toLong),
       (cuts(0).toLong, cuts(1).toLong), (cuts(1).toLong, Long.MaxValue))
-    bounds.zipWithIndex.foreach { case ((lo, hi), b) =>
-      val stage = Files.createTempDirectory(s"graft_q153_b$b").toString
-      d.filter(col("doc_id") > lo && col("doc_id") <= hi)
-        .repartition(1).write.mode("overwrite").parquet(stage)
-      val part = Files.list(Paths.get(stage)).iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-")).get
-      val dst = Paths.get(srcDir, s"b$b.parquet")
-      Files.move(part, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + b * 60000L))
-    }
+    val batches = bounds.map { case (lo, hi) =>
+      d.filter(col("doc_id") > lo && col("doc_id") <= hi) }
     val cleaned = new KeyedLakeTable(s, LakeTableSpec(
       Files.createTempDirectory("graft_q153_clean").toString,
       recordKeys = Seq("doc_id"), precombine = "update_at",
@@ -1737,8 +1726,7 @@ object PipelineQueries {
       recordKeys = Seq("doc_id"), precombine = "update_at",
       partitionSource = "create_at", tieBreak = Seq("batch_id")))
     graft.streaming.CdcStreamIngest.toNearDupTable(
-      s.readStream.schema(d.schema).option("maxFilesPerTrigger", 1)
-        .parquet(srcDir),
+      mtimeOrderedStream(s, "q153", batches),
       "doc_id", "text", n = 2, bands = 16, rowsPerBand = 8,
       threshold = 0.9, cleaned, registry,
       Files.createTempDirectory("graft_q153_ckpt").toString)
@@ -1795,25 +1783,15 @@ object PipelineQueries {
     * level by [[q158StreamCurateMisaligned]], whose injected corpus
     * drops a non-empty stage-2 set at both fixture scales. */
   def q157StreamCurate(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val d = docs(s, dir)
       .withColumn("create_at", lit("2000-01-01T00:00:00.000000+0000"))
       .withColumn("update_at", lit("2000-01-01T00:00:00.000000+0000"))
     val cuts = d.stat.approxQuantile("doc_id", Array(0.33, 0.66), 0.001)
-    val srcDir = Files.createTempDirectory("graft_q157_src").toString
     val bounds = Seq((Long.MinValue, cuts(0).toLong),
       (cuts(0).toLong, cuts(1).toLong), (cuts(1).toLong, Long.MaxValue))
-    bounds.zipWithIndex.foreach { case ((lo, hi), b) =>
-      val stage = Files.createTempDirectory(s"graft_q157_b$b").toString
-      d.filter(col("doc_id") > lo && col("doc_id") <= hi)
-        .repartition(1).write.mode("overwrite").parquet(stage)
-      val part = Files.list(Paths.get(stage)).iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-")).get
-      val dst = Paths.get(srcDir, s"b$b.parquet")
-      Files.move(part, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + b * 60000L))
-    }
+    val batches = bounds.map { case (lo, hi) =>
+      d.filter(col("doc_id") > lo && col("doc_id") <= hi) }
     val curated = new KeyedLakeTable(s, LakeTableSpec(
       Files.createTempDirectory("graft_q157_cur").toString,
       recordKeys = Seq("doc_id"), precombine = "update_at",
@@ -1827,8 +1805,7 @@ object PipelineQueries {
       recordKeys = Seq("doc_id"), precombine = "update_at",
       partitionSource = "create_at", tieBreak = Seq("batch_id")))
     graft.streaming.CdcStreamIngest.toCuratedTable(
-      s.readStream.schema(d.schema).option("maxFilesPerTrigger", 1)
-        .parquet(srcDir),
+      mtimeOrderedStream(s, "q157", batches),
       "doc_id", "text", k = 3, n = 2, bands = 16, rowsPerBand = 8,
       threshold = 0.9, curated, spanReg, docReg,
       Files.createTempDirectory("graft_q157_ckpt").toString)
@@ -1935,7 +1912,7 @@ object PipelineQueries {
     * sf0.1, and the streamed result must land on the one-statement
     * composition's bits with every B adjudicated. */
   def q158StreamCurateMisaligned(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val d0 = docs(s, dir).select(col("doc_id"), col("text"))
     val sel = d0.filter(col("doc_id") % 7 === 0)
       .select(col("doc_id"),
@@ -1950,20 +1927,10 @@ object PipelineQueries {
       .withColumn("create_at", lit("2000-01-01T00:00:00.000000+0000"))
       .withColumn("update_at", lit("2000-01-01T00:00:00.000000+0000"))
     val cuts = d.stat.approxQuantile("doc_id", Array(0.33, 0.66), 0.001)
-    val srcDir = Files.createTempDirectory("graft_q158_src").toString
     val bounds = Seq((Long.MinValue, cuts(0).toLong),
       (cuts(0).toLong, cuts(1).toLong), (cuts(1).toLong, Long.MaxValue))
-    bounds.zipWithIndex.foreach { case ((lo, hi), b) =>
-      val stage = Files.createTempDirectory(s"graft_q158_b$b").toString
-      d.filter(col("doc_id") > lo && col("doc_id") <= hi)
-        .repartition(1).write.mode("overwrite").parquet(stage)
-      val part = Files.list(Paths.get(stage)).iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-")).get
-      val dst = Paths.get(srcDir, s"b$b.parquet")
-      Files.move(part, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + b * 60000L))
-    }
+    val batches = bounds.map { case (lo, hi) =>
+      d.filter(col("doc_id") > lo && col("doc_id") <= hi) }
     val curated = new KeyedLakeTable(s, LakeTableSpec(
       Files.createTempDirectory("graft_q158_cur").toString,
       recordKeys = Seq("doc_id"), precombine = "update_at",
@@ -1977,8 +1944,7 @@ object PipelineQueries {
       recordKeys = Seq("doc_id"), precombine = "update_at",
       partitionSource = "create_at", tieBreak = Seq("batch_id")))
     graft.streaming.CdcStreamIngest.toCuratedTable(
-      s.readStream.schema(d.schema).option("maxFilesPerTrigger", 1)
-        .parquet(srcDir),
+      mtimeOrderedStream(s, "q158", batches),
       "doc_id", "text", k = 3, n = 2, bands = 16, rowsPerBand = 8,
       threshold = 0.9, curated, spanReg, docReg,
       Files.createTempDirectory("graft_q158_ckpt").toString)
@@ -3083,22 +3049,11 @@ object PipelineQueries {
     * Unlike q151/q153 this holds WITHOUT monotone arrival ids: the drop
     * rule is corpus-symmetric, so any order lands on the same state. */
   def q162StreamLineDedup(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val d = linedDocs(s, dir)
       .withColumn("create_at", lit("2000-01-01T00:00:00.000000+0000"))
       .withColumn("update_at", lit("2000-01-01T00:00:00.000000+0000"))
-    val srcDir = Files.createTempDirectory("graft_q162_src").toString
-    (0 until 3).foreach { b =>
-      val stage = Files.createTempDirectory(s"graft_q162_b$b").toString
-      d.filter(pmod(col("doc_id"), lit(3)) === b)
-        .repartition(1).write.mode("overwrite").parquet(stage)
-      val part = Files.list(Paths.get(stage)).iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-")).get
-      val dst = Paths.get(srcDir, s"b$b.parquet")
-      Files.move(part, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + b * 60000L))
-    }
+    val batches = (0 until 3).map(b => d.filter(pmod(col("doc_id"), lit(3)) === b))
     val cleaned = new KeyedLakeTable(s, LakeTableSpec(
       Files.createTempDirectory("graft_q162_clean").toString,
       recordKeys = Seq("doc_id"), precombine = "update_at",
@@ -3108,8 +3063,7 @@ object PipelineQueries {
       recordKeys = Seq("doc_id", "pos"), precombine = "update_at",
       partitionSource = "create_at", tieBreak = Seq("batch_id")))
     graft.streaming.CdcStreamIngest.toLineDedupTable(
-      s.readStream.schema(d.schema).option("maxFilesPerTrigger", 1)
-        .parquet(srcDir),
+      mtimeOrderedStream(s, "q162", batches),
       "doc_id", "text", maxDocs = 2, cleaned, registry,
       Files.createTempDirectory("graft_q162_ckpt").toString)
     cleaned.readLive().select(col("doc_id"), col("text"))
@@ -3352,22 +3306,12 @@ object PipelineQueries {
     * q161's SQL verbatim, split-invariance spec-pinned
     * (StreamingPagerankSpec). */
   def q169StreamPagerank(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val e = PageRank.corpusEdges(s, dir)
       .withColumn("create_at", lit("2000-01-01T00:00:00.000000+0000"))
       .withColumn("update_at", lit("2000-01-01T00:00:00.000000+0000"))
-    val srcDir = Files.createTempDirectory("graft_q169_src").toString
-    (0 until 3).foreach { b =>
-      val stage = Files.createTempDirectory(s"graft_q169_b$b").toString
-      e.filter(pmod(abs(xxhash64(col("src"), col("dst"))), lit(3)) === b)
-        .repartition(1).write.mode("overwrite").parquet(stage)
-      val part = Files.list(Paths.get(stage)).iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-")).get
-      val dst = Paths.get(srcDir, s"b$b.parquet")
-      Files.move(part, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + b * 60000L))
-    }
+    val batches = (0 until 3).map(b =>
+      e.filter(pmod(abs(xxhash64(col("src"), col("dst"))), lit(3)) === b))
     val edgeTable = new KeyedLakeTable(s, LakeTableSpec(
       Files.createTempDirectory("graft_q169_edges").toString,
       recordKeys = Seq("src", "dst"), precombine = "update_at",
@@ -3377,8 +3321,7 @@ object PipelineQueries {
       recordKeys = Seq("node"), precombine = "update_at",
       partitionSource = "create_at"))
     graft.streaming.CdcStreamIngest.toPagerankTable(
-      s.readStream.schema(e.schema).option("maxFilesPerTrigger", 1)
-        .parquet(srcDir),
+      mtimeOrderedStream(s, "q169", batches),
       edgeTable, ranksTable, iters = 5,
       Files.createTempDirectory("graft_q169_ckpt").toString)
     ranksTable.read().select(col("node"), col("rank"))
@@ -3405,25 +3348,14 @@ object PipelineQueries {
     * three batches × two iterations, unrolled CTEs, integer fixed-point
     * throughout — to the bit. */
   def q170StreamPagerankWarm(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val bucket = pmod(
       conv(substring(md5(concat(col("src"), lit("|"), col("dst"))), 1, 8),
         16, 10).cast("long"), lit(3))
     val e = PageRank.corpusEdges(s, dir)
       .withColumn("create_at", lit("2000-01-01T00:00:00.000000+0000"))
       .withColumn("update_at", lit("2000-01-01T00:00:00.000000+0000"))
-    val srcDir = Files.createTempDirectory("graft_q170_src").toString
-    (0 until 3).foreach { b =>
-      val stage = Files.createTempDirectory(s"graft_q170_b$b").toString
-      e.filter(bucket === b)
-        .repartition(1).write.mode("overwrite").parquet(stage)
-      val part = Files.list(Paths.get(stage)).iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-")).get
-      val dst = Paths.get(srcDir, s"b$b.parquet")
-      Files.move(part, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + b * 60000L))
-    }
+    val batches = (0 until 3).map(b => e.filter(bucket === b))
     val edgeTable = new KeyedLakeTable(s, LakeTableSpec(
       Files.createTempDirectory("graft_q170_edges").toString,
       recordKeys = Seq("src", "dst"), precombine = "update_at",
@@ -3433,8 +3365,7 @@ object PipelineQueries {
       recordKeys = Seq("node", "batch_id"), precombine = "update_at",
       partitionSource = "create_at", tieBreak = Seq("batch_id")))
     graft.streaming.CdcStreamIngest.toPagerankWarmTable(
-      s.readStream.schema(e.schema).option("maxFilesPerTrigger", 1)
-        .parquet(srcDir),
+      mtimeOrderedStream(s, "q170", batches),
       edgeTable, ranksTable, itersPerBatch = 2,
       Files.createTempDirectory("graft_q170_ckpt").toString)
     ranksTable.read()

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
+import org.json4s.JString
+import org.json4s.jackson.JsonMethods.parse
 
 import graft.ops.LakeOps
 import graft.sink.KeyedLakeTable
@@ -63,19 +65,12 @@ object CdcStreamIngest {
     val path = new org.apache.hadoop.fs.Path(checkpointDir, "metadata")
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     val in = fs.open(path)
-    val raw = try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toString("UTF-8")
-    } finally in.close()
-    // one-line JSON {"id":"<uuid>"} — extracted by regex so the engine
-    // takes no JSON-library dependency for a 36-char field
-    """"id"\s*:\s*"([0-9a-fA-F\-]+)"""".r.findFirstMatchIn(raw)
-      .map(_.group(1))
-      .getOrElse(throw new IllegalStateException(
-        s"checkpoint metadata at $path carries no query id: $raw"))
+    val raw = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    parse(raw) \ "id" match {
+      case JString(id) => id
+      case _ => throw new IllegalStateException(
+        s"checkpoint metadata at $path carries no query id: $raw")
+    }
   }
 
   /** File-based CDC stream source. `maxFilesPerTrigger` is the micro-batch

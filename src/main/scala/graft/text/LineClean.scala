@@ -124,78 +124,4 @@ object LineClean {
         delim).as(textCol))
       .select(df.columns.map(col): _*)
   }
-
-  /** [[dropRepeatedLines]] with the REASSEMBLY EXCHANGE eliminated — the
-    * literal-hot-set form for the common case where the hot set
-    * (boilerplate lines only — output-of-aggregate sized) is small:
-    *
-    *  1. the frequency pass is unchanged in WHAT it ships — an explode of
-    *     (md5, doc_id) 16-byte pairs into one aggregate exchange — but
-    *     its hot output collapses to ONE bounded driver row (a
-    *     `collect_set` aggregate, capped LOUDLY at `maxHotSet` — past the
-    *     cap this method falls back to the shuffle-reassembly form, so
-    *     adversarial duplication degrades to the unbounded-safe plan
-    *     instead of an OOM);
-    *  2. the sorted hash array becomes a plan LITERAL and each document
-    *     filters its own lines in place with a binary-search probe
-    *     ([[graft.functions.SortedArrayContains]], O(log hot) per line)
-    *     — the document text never leaves its partition, and the
-    *     (pos, line)-wide groupBy reassembly that dominates
-    *     [[dropRepeatedLines]] at scale disappears entirely.
-    *
-    * Why a literal and not a broadcast-joined 1-row frame: a column
-    * reference to the hot array crosses the higher-order-function
-    * CodegenFallback boundary ROW-WISE — every document row materializes
-    * its own copy of the array into the joined UnsafeRow (measured:
-    * 16.8 s vs 2.5 s at ×100 sf0.1 — 500k docs × a 5 MB array is
-    * terabytes of memcpy). A literal is referenced once per task.
-    * The collect itself is bounded by construction (it is the hot
-    * AGGREGATE's output, orders of magnitude smaller than the line
-    * count) and the cap makes the bound loud.
-    *
-    * Same output contract as [[dropRepeatedLines]] bit-for-bit (a doc
-    * whose every line is hot drops from the output; LineCleanSpec pins
-    * equality, q160's oracle pins the corpus): the forms differ only in
-    * plan shape. */
-  def dropRepeatedLinesInPlace(df: DataFrame, idCol: String, textCol: String,
-                               delim: String = "\n", maxDocs: Int = 2,
-                               maxHotSet: Int = 5000000): DataFrame = {
-    val ls = lines(col(textCol), delim)
-    val hotRow = df
-      .select(col(idCol), explode(ls).as("__line"))
-      .select(col(idCol), md5(col("__line")).as("__h"))
-      .groupBy(col("__h"))
-      .agg(countDistinct(col(idCol)).as("__docs"))
-      .where(col("__docs") >= maxDocs)
-      // cap + 1 so overflow is DETECTED, not silently truncated
-      .limit(maxHotSet + 1)
-      .agg(collect_set(col("__h")).as("__hs"))
-      .head()
-    val hot: Array[String] =
-      if (hotRow.isNullAt(0)) Array.empty
-      else hotRow.getSeq[String](0).toArray
-    if (hot.length > maxHotSet) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"dropRepeatedLinesInPlace: hot set exceeds maxHotSet=$maxHotSet " +
-          "— falling back to the shuffle-reassembly form")
-      return dropRepeatedLines(df, idCol, textCol, delim, maxDocs)
-    }
-    // UTF8 binary order — the order SortedArrayContains probes by
-    java.util.Arrays.sort(hot.asInstanceOf[Array[AnyRef]],
-      (a: AnyRef, b: AnyRef) =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(
-          a.asInstanceOf[String]).compareTo(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            b.asInstanceOf[String])))
-    val hs = typedlit(hot)
-    def probe(key: Column): Column =
-      org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.functions.SortedArrayContains(
-          org.apache.spark.sql.graft.ColumnBridge.expression(hs),
-          org.apache.spark.sql.graft.ColumnBridge.expression(key)))
-    df.withColumn("__kept", filter(ls, l => !probe(md5(l))))
-      .where(size(col("__kept")) > 0)
-      .withColumn(textCol, array_join(col("__kept"), delim))
-      .select(df.columns.map(col): _*)
-  }
 }

@@ -111,4 +111,20 @@ class DedupScaleSpec extends AnyFunSuite with SparkSpec {
     assert(viaDropSet === viaPairs)
     assert(viaDropSet.nonEmpty && viaDropSet.size < d.count())
   }
+
+  test("the media engine over SimHash fingerprints reproduces simHashNearDup") {
+    // one banded core and one member expansion serve both paths, so
+    // banding the text path's own fingerprints as media lands on its pairs
+    val d = spark.read.parquet(s"$sfDir/documents.parquet")
+    val text = Dedup.simHashNearDup(d, "doc_id", "text", maxHamming = 3)
+    val fps = d.filter(length(graft.text.TextOps.normalized(col("text"))) > 0)
+      .select(col("doc_id").as("media_id"),
+        org.apache.spark.sql.graft.ColumnBridge.column(graft.functions.SimHash64(
+          org.apache.spark.sql.graft.ColumnBridge.expression(
+            graft.text.TextOps.tokens(col("text"))))).as("fp"))
+    val media = graft.multimodal.Banded64.pairs(fps, maxHamming = 3)
+    val want = text.collect().toSet
+    assert(want.nonEmpty)
+    assert(media.collect().toSet === want)
+  }
 }

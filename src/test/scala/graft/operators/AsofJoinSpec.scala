@@ -171,25 +171,21 @@ class AsofJoinSpec extends AnyFunSuite with SparkSpec {
       }
     ensure("asof_facts_bkt", facts)
     ensure("asof_dims_bkt", dims)
-    // Spark ≥3.1 hides bucketed scans' sort order behind this legacy
-    // conf (the multi-file-per-bucket case made it rarely usable; the
+    // Spark ≥3.1 hides bucketed scans' sort order behind a legacy conf
+    // (the multi-file-per-bucket case made it rarely usable; the
     // one-file-per-bucket writer here is exactly the usable case)
-    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering",
-      "true")
-    try {
-      val plan = AsofJoin.asofMerge(spark.table("asof_facts_bkt"),
-          spark.table("asof_dims_bkt"), "k", "ts", Seq("state"))
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("AsofMerge"), plan)
-      assert(!plan.contains("Exchange"), s"expected zero exchanges:\n$plan")
-      assert(!plan.contains("Sort"), s"expected zero sorts:\n$plan")
-      // and the layout-consuming plan still produces the exact answer
-      val got = AsofJoin.asofMerge(spark.table("asof_facts_bkt"),
-          spark.table("asof_dims_bkt"), "k", "ts", Seq("state"))
-        .collect().map(r => (r.getLong(0), Option(r.getString(3)))).toMap
-      assert(got === out)
-    } finally spark.conf.set(
-      "spark.sql.legacy.bucketedTableScan.outputOrdering", "false")
+    assertScanOrdering()
+    val plan = AsofJoin.asofMerge(spark.table("asof_facts_bkt"),
+        spark.table("asof_dims_bkt"), "k", "ts", Seq("state"))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("AsofMerge"), plan)
+    assert(!plan.contains("Exchange"), s"expected zero exchanges:\n$plan")
+    assert(!plan.contains("Sort"), s"expected zero sorts:\n$plan")
+    // and the layout-consuming plan still produces the exact answer
+    val got = AsofJoin.asofMerge(spark.table("asof_facts_bkt"),
+        spark.table("asof_dims_bkt"), "k", "ts", Seq("state"))
+      .collect().map(r => (r.getLong(0), Option(r.getString(3)))).toMap
+    assert(got === out)
   }
 
   test("asof auto-detects the bucketed layout: the SAME user call plans " +
@@ -201,39 +197,43 @@ class AsofJoinSpec extends AnyFunSuite with SparkSpec {
       }
     ensure("asof_facts_bkt", facts)
     ensure("asof_dims_bkt", dims)
-    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering",
-      "true")
-    try {
-      // bucketed scans (with a pass-through filter/projection in the
-      // way): asof() itself must plan the zero-exchange merge
-      val auto = AsofJoin.asof(
-        spark.table("asof_facts_bkt").filter($"fid" >= 0L),
-        spark.table("asof_dims_bkt").select($"k", $"ts", $"state"),
-        "k", "ts", Seq("state"))
-      val plan = auto.queryExecution.executedPlan.toString
-      assert(plan.contains("AsofMerge"),
-        s"asof() on bucketed inputs must plan the merge:\n$plan")
-      assert(!plan.contains("Exchange"), s"expected zero exchanges:\n$plan")
-      val got = auto.collect()
-        .map(r => (r.getLong(0), Option(r.getString(3)))).toMap
-      assert(got === out)
-      // raw in-memory inputs: the same call keeps the carry form
-      val rawPlan = AsofJoin.asof(facts, dims, "k", "ts", Seq("state"))
-        .queryExecution.executedPlan.toString
-      assert(rawPlan.contains("AsofCarry"),
-        s"asof() on raw inputs must keep the carry:\n$rawPlan")
-      // mismatched bucket counts: co-partitioning is lost — carry
-      if (!spark.catalog.tableExists("asof_dims_bkt8"))
-        dims.repartition(8, $"k").write.mode("overwrite")
-          .bucketBy(8, "k").sortBy("k", "ts").saveAsTable("asof_dims_bkt8")
-      val mixedPlan = AsofJoin.asof(spark.table("asof_facts_bkt"),
-          spark.table("asof_dims_bkt8"), "k", "ts", Seq("state"))
-        .queryExecution.executedPlan.toString
-      assert(mixedPlan.contains("AsofCarry"),
-        s"mismatched bucket counts must fall back to carry:\n$mixedPlan")
-    } finally spark.conf.set(
-      "spark.sql.legacy.bucketedTableScan.outputOrdering", "false")
+    assertScanOrdering()
+    // bucketed scans (with a pass-through filter/projection in the
+    // way): asof() itself must plan the zero-exchange merge
+    val auto = AsofJoin.asof(
+      spark.table("asof_facts_bkt").filter($"fid" >= 0L),
+      spark.table("asof_dims_bkt").select($"k", $"ts", $"state"),
+      "k", "ts", Seq("state"))
+    val plan = auto.queryExecution.executedPlan.toString
+    assert(plan.contains("AsofMerge"),
+      s"asof() on bucketed inputs must plan the merge:\n$plan")
+    assert(!plan.contains("Exchange"), s"expected zero exchanges:\n$plan")
+    val got = auto.collect()
+      .map(r => (r.getLong(0), Option(r.getString(3)))).toMap
+    assert(got === out)
+    // raw in-memory inputs: the same call keeps the carry form
+    val rawPlan = AsofJoin.asof(facts, dims, "k", "ts", Seq("state"))
+      .queryExecution.executedPlan.toString
+    assert(rawPlan.contains("AsofCarry"),
+      s"asof() on raw inputs must keep the carry:\n$rawPlan")
+    // mismatched bucket counts: co-partitioning is lost — carry
+    if (!spark.catalog.tableExists("asof_dims_bkt8"))
+      dims.repartition(8, $"k").write.mode("overwrite")
+        .bucketBy(8, "k").sortBy("k", "ts").saveAsTable("asof_dims_bkt8")
+    val mixedPlan = AsofJoin.asof(spark.table("asof_facts_bkt"),
+        spark.table("asof_dims_bkt8"), "k", "ts", Seq("state"))
+      .queryExecution.executedPlan.toString
+    assert(mixedPlan.contains("AsofCarry"),
+      s"mismatched bucket counts must fall back to carry:\n$mixedPlan")
   }
+
+  /** The bucketed-merge tests plan with the engine's own setting, which
+    * `GraftSession.configure` fixes on every session, this one included;
+    * they neither set nor reset it, so later suites in the JVM plan as the
+    * engine does. */
+  private def assertScanOrdering(): Unit =
+    assert(spark.conf.get(
+      "spark.sql.legacy.bucketedTableScan.outputOrdering") === "true")
 
   test("seeded fuzz: distributed as-of equals the in-memory reference") {
     val rnd = new scala.util.Random(11)

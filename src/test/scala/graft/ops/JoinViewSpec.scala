@@ -31,12 +31,11 @@ class JoinViewSpec extends AnyFunSuite with SparkSpec {
       precombine = "update_at", partitionSource = "create_at",
       softDeleteCol = Some("is_deleted")))
 
-  private def newView(deferred: Boolean = false): JoinView = {
+  private def newView(): JoinView = {
     val base = tmpDir("jv")
     new JoinView(spark, s"$base/view", s"$base/orphans",
       factKeys = Seq("id"), fkCol = "fk",
-      factPrecombine = "update_at", partitionSource = "create_at",
-      deferred = deferred)
+      factPrecombine = "update_at", partitionSource = "create_at")
   }
 
   /** Expected live view: live latest-wins facts INNER JOIN current dims. */
@@ -52,11 +51,10 @@ class JoinViewSpec extends AnyFunSuite with SparkSpec {
 
   private def dimsDf(ds: Seq[Dim]): DataFrame = ds.toDF()
 
-  for (deferred <- Seq(false, true))
-  test(s"orphans buffer late dims; retarget, delete, refresh, resurrection " +
-      s"all reconcile to the from-scratch join (deferred=$deferred)") {
+  test("orphans buffer late dims; retarget, delete, refresh, resurrection " +
+      "all reconcile to the from-scratch join") {
     val ft = factTable()
-    val jv = newView(deferred)
+    val jv = newView()
     var dims = Map.empty[String, String]
     var dimSnap = dimsDf(Nil)
 
@@ -97,11 +95,6 @@ class JoinViewSpec extends AnyFunSuite with SparkSpec {
     val facts4 = facts3 ++ batch4.map(x => x.id -> x).toMap
     assert(liveSet(jv) === expected(facts4, dims))
     assert(jv.readOrphans().count() === 0)
-    if (deferred) { // compaction folds versions; state must not move
-      jv.compact()
-      assert(liveSet(jv) === expected(facts4, dims))
-      assert(jv.readOrphans().count() === 0)
-    }
   }
 
   test("the cycle counter survives a restart and later cycles still win") {

@@ -139,83 +139,52 @@ class LineCleanSpec extends AnyFunSuite {
       .collect().head.toSeq === Seq("de", "keep two"))
   }
 
-  // -------------------------------------------- in-place (broadcast) form
+  /** Plain-Scala statement of the global line-dedup contract: split with
+    * trailing empties kept, drop lines present in >= `maxDocs` distinct
+    * docs, drop docs left with no line. */
+  private def lineDedupReference(rows: Seq[(Long, String)],
+      maxDocs: Int): Map[Long, String] = {
+    val split = rows.map { case (id, t) => id -> t.split("\n", -1).toSeq }
+    val docsPerLine = split.flatMap { case (id, ls) => ls.distinct.map(_ -> id) }
+      .groupBy(_._1).map { case (l, ids) => l -> ids.map(_._2).distinct.size }
+    split.map { case (id, ls) => id -> ls.filter(docsPerLine(_) < maxDocs) }
+      .collect { case (id, ls) if ls.nonEmpty => id -> ls.mkString("\n") }
+      .toMap
+  }
 
-  test("dropRepeatedLinesInPlace equals dropRepeatedLines on every fixture") {
+  private def dedupedMap(df: DataFrame, maxDocs: Int): Map[Long, String] =
+    LineClean.dropRepeatedLines(df, "doc_id", "text", maxDocs = maxDocs)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  test("dropRepeatedLines equals the line-count reference on every fixture") {
     val fixtures = Seq(
-      docs(
-        (1L, "cookie banner text\nunique line in doc one"),
+      Seq((1L, "cookie banner text\nunique line in doc one"),
         (2L, "cookie banner text\nunique line in doc two"),
         (3L, "only unique content lives here")),
-      docs((1L, "la la la\nla la la\nsomething else"),
+      Seq((1L, "la la la\nla la la\nsomething else"),
         (2L, "unrelated content")),
-      docs(
-        (1L, "shared one\nshared two"),
+      Seq((1L, "shared one\nshared two"),
         (2L, "shared two\nshared one"),
         (3L, "keep a\nshared one\nkeep b\nshared two\nkeep c")),
-      // no hot line at all: the broadcast row carries an EMPTY array
-      docs((1L, "alpha"), (2L, "beta")),
-      // empty-text doc: its single "" line participates like any other
-      docs((1L, ""), (2L, ""), (3L, "real content\n")))
-    fixtures.foreach { d =>
-      val a = LineClean.dropRepeatedLines(d, "doc_id", "text")
-        .orderBy("doc_id").collect().toSeq
-      val b = LineClean.dropRepeatedLinesInPlace(d, "doc_id", "text")
-        .orderBy("doc_id").collect().toSeq
-      assert(b === a)
-    }
+      // no repeated line at all: nothing is removed
+      Seq((1L, "alpha"), (2L, "beta")),
+      // empty-text docs: the single "" line counts like any other line,
+      // and so does the trailing "" after a final newline
+      Seq((1L, ""), (2L, ""), (3L, "real content\n")))
+    for (rows <- fixtures; maxDocs <- Seq(2, 3))
+      assert(dedupedMap(docs(rows: _*), maxDocs) ===
+        lineDedupReference(rows, maxDocs), s"maxDocs=$maxDocs rows=$rows")
   }
 
-  test("in-place form on the corpus-lined fixture equals the shuffle form") {
+  test("dropRepeatedLines on the corpus-lined fixture equals the reference") {
     val lined = graft.queries.PipelineQueries.linedDocs(
       spark, "/root/testdata/sf0.001")
-    val a = LineClean.dropRepeatedLines(lined, "doc_id", "text", maxDocs = 2)
-      .orderBy("doc_id").collect().toSeq
-    val b = LineClean.dropRepeatedLinesInPlace(lined, "doc_id", "text",
-      maxDocs = 2).orderBy("doc_id").collect().toSeq
-    assert(b === a)
-  }
-
-  test("sorted_array_contains agrees with array_contains (randomized)") {
-    val rnd = new scala.util.Random(7)
-    val vals = (1 to 500).map(_ => rnd.alphanumeric.take(8).mkString)
-    val set = vals.filter(_ => rnd.nextBoolean()).distinct.sorted
-    val probeDf = vals.toDF("v")
-      .crossJoin(broadcast(Seq(Tuple1(set)).toDF("hs")
-        .select(array_sort(col("hs")).as("hs"))))
-    val got = probeDf.select(col("v"),
-      org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.functions.SortedArrayContains(
-          org.apache.spark.sql.graft.ColumnBridge.expression(col("hs")),
-          org.apache.spark.sql.graft.ColumnBridge.expression(col("v"))))
-        .as("s"),
-      array_contains(col("hs"), col("v")).as("a"))
-      .collect()
-    got.foreach(r => assert(r.getBoolean(1) === r.getBoolean(2), r))
-  }
-
-  test("in-place probe plans NO exchange and NO join (pure projection)") {
-    val d = docs(
-      (1L, "shared one\nkeep a"),
-      (2L, "shared one\nkeep b"))
-    // the frequency aggregate runs eagerly at construction (one bounded
-    // job); the RETURNED frame — the per-doc probe — must be a
-    // zero-shuffle, join-free projection: the hot set rides as a literal
-    val plan = LineClean.dropRepeatedLinesInPlace(d, "doc_id", "text")
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan)
-    assert(!plan.contains("Join"), plan)
-  }
-
-  test("in-place form past maxHotSet falls back to the shuffle form") {
-    val d = docs(
-      (1L, "h1\nh2\nh3\nmine"),
-      (2L, "h1\nh2\nh3\nyours"))
-    val out = LineClean.dropRepeatedLinesInPlace(d, "doc_id", "text",
-      maxHotSet = 2) // 3 hot lines > cap
-    val want = LineClean.dropRepeatedLines(d, "doc_id", "text")
-      .orderBy("doc_id").collect().toSeq
-    assert(out.orderBy("doc_id").collect().toSeq === want)
+    val rows = lined.collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
+    for (maxDocs <- Seq(2, 3)) {
+      val want = lineDedupReference(rows, maxDocs)
+      assert(want != rows.toMap, s"maxDocs=$maxDocs removes nothing")
+      assert(dedupedMap(lined, maxDocs) === want, s"maxDocs=$maxDocs")
+    }
   }
 
   // --------------------------------------------------------- plan shape

@@ -271,4 +271,23 @@ class CdcStreamIngestSpec extends AnyFunSuite with SparkSpec {
     intercept[IllegalStateException](
       CdcStreamIngest.lineageToken(spark, bad))
   }
+
+  test("lineageToken takes the top-level id from any JSON layout") {
+    import java.nio.file.{Files, Paths}
+    // pretty-printed, id not the first key, a nested object with its own id
+    val ckpt = tmpDir("lineage-layout")
+    Files.writeString(Paths.get(ckpt, "metadata"),
+      """{
+        |  "source" : { "id" : "not-the-query" },
+        |  "id" : "aaaaaaaa-bbbb-cccc-dddd-eeeeeeeeeeee"
+        |}
+        |""".stripMargin)
+    assert(CdcStreamIngest.lineageToken(spark, ckpt) ===
+      "aaaaaaaa-bbbb-cccc-dddd-eeeeeeeeeeee")
+    // a non-string id is no query id either
+    val numeric = tmpDir("lineage-numeric")
+    Files.writeString(Paths.get(numeric, "metadata"), """{"id":42}""")
+    intercept[IllegalStateException](
+      CdcStreamIngest.lineageToken(spark, numeric))
+  }
 }
